@@ -211,7 +211,7 @@ class Replayer:
         stale_obs = None
         pre_batch = None
         if self._horizon is None:
-            self._horizon = int(getattr(self.table, "gc_horizon", lambda: 0)() or 0)
+            self._horizon = self.table.gc_horizon()
         horizon = self._horizon
         if horizon:
             from pyspark.sql import Observation
@@ -412,7 +412,7 @@ class Replayer:
         res = self.table.merge(
             src,
             epoch=epochs,
-            checkpoint_df=ckpt,
+            checkpoint_rows=ckpt,
             op_col=self.op_col,
             lsn_col=self.lsn_col,
             stats={"events": events},
@@ -424,7 +424,7 @@ class Replayer:
         compacted = 0
         if (
             self.auto_compact
-            and snap.get("merge_mode", "cow") == "mor"
+            and snap["merge_mode"] == "mor"
             and res.buckets_rewritten
         ):
             c = self.table.maintain(

@@ -10,6 +10,7 @@ from etl_gmaps_spark.tableio.snapshot_table import (  # noqa: F401
     CommitConflict,
     CommitResult,
     EpochSet,
+    FormatVersionMismatch,
     SnapshotTable,
     bucket_expr,
 )

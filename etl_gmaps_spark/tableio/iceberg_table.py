@@ -78,10 +78,9 @@ def ranges_property_sql(identifier: str, ranges: list[tuple[int, int]]) -> str:
     """Ledger rollup stamp: every epoch inside any half-open ``b:w``
     range is applied and its per-epoch property may be unset —
     SnapshotTable.EpochSet parity. One property, stamped in ONE atomic
-    ALTER, replaces the earlier base/watermark two-stamp protocol (no
-    crash window between two halves of the rollup). Each contiguous
-    replay — zero-based, 1-based, mid-binlog-resumed, or the streaming
-    ledger namespace at 10^9 — compacts to one ``b:w`` pair, so
+    ALTER, so the rollup has no crash window between two stamps. Each
+    contiguous replay — zero-based, 1-based, mid-binlog-resumed, or the
+    streaming ledger namespace at 10^9 — compacts to one ``b:w`` pair, so
     metadata stays O(fragmentation) instead of one property per epoch
     forever."""
     packed = ",".join(f"{int(b)}:{int(w)}" for b, w in ranges)
@@ -149,21 +148,6 @@ def _decode_ckpt(partition: int, value: str) -> dict:
         "epoch": int(epoch),
         "updated_at": datetime.fromisoformat(ts_s) if ts_s else None,
     }
-
-
-def rollup_epochs(
-    ranges: list[tuple[int, int]], applied: set[int]
-) -> tuple[list[tuple[int, int]], set[int]]:
-    """Fold the applied-epoch keys into the range list: returns
-    ``(new_ranges, still_sparse)`` via EpochSet's normalizer — runs of
-    length >= 2 become/extend/MERGE ranges (a late-filled gap joins its
-    neighbors), singletons stay sparse. Every epoch key NOT in
-    ``still_sparse`` is covered by a range and its per-epoch property
-    may be unset. Pure — unit/property-tested in-sandbox, executed
-    against a real catalog by merge()."""
-    return _normalize_epochs(
-        [(int(b), int(w)) for b, w in ranges], {int(e) for e in applied}
-    )
 
 
 def merge_sql(
@@ -289,7 +273,7 @@ class IcebergTable:
 
     def _epoch_ledger(
         self,
-    ) -> tuple[list[tuple[int, int]], dict[int, tuple[int, int]], bool]:
+    ) -> tuple[list[tuple[int, int]], dict[int, tuple[int, int]]]:
         """(ranges, {epoch: (snapshot_id, events)}) from the
         `cdc.epoch.*` table properties merge() stamps. SHOW
         TBLPROPERTIES is metadata-only (no data scan) and — unlike
@@ -299,10 +283,9 @@ class IcebergTable:
         numbering — zero-based, 1-based, mid-binlog, or the streaming
         namespace) and unsets the covered per-epoch keys, so metadata
         stays O(fragmentation) no matter how many epochs applied
-        (EpochSet parity). Legacy `cdc.epoch.base`/`.watermark` pairs
-        from the earlier two-stamp protocol read back as one range."""
+        (EpochSet parity). merge() only ever stamps normalized ranges,
+        so the parsed list is sorted, disjoint and non-adjacent."""
         ranges: list[tuple[int, int]] = []
-        legacy_base = legacy_watermark = 0
         out: dict[int, tuple[int, int]] = {}
         for k, v in self._properties().items():
             if k.startswith("cdc.epoch."):
@@ -313,25 +296,9 @@ class IcebergTable:
                         for b, _, w in (p.partition(":") for p in v.split(",") if p)
                     ]
                     continue
-                if suffix == "watermark":
-                    legacy_watermark = int(v)
-                    continue
-                if suffix == "base":
-                    legacy_base = int(v)
-                    continue
                 snap_s, _, ev_s = v.partition(":")
                 out[int(suffix)] = (int(snap_s), int(ev_s or 0))
-        legacy = legacy_watermark > legacy_base
-        if legacy:
-            # append, don't shadow: a table may carry both a legacy pair
-            # (pre-ranges commits) and the ranges property (post).
-            # Consumers normalize (EpochSet, rollup_epochs) or only
-            # test membership, so an unnormalized extra pair is safe —
-            # and a length-1 legacy range is never silently dropped.
-            # The flag lets merge() retire the legacy keys on its next
-            # rollup (their coverage folds into cdc.epoch.ranges).
-            ranges = ranges + [(legacy_base, legacy_watermark)]
-        return ranges, out, legacy
+        return ranges, out
 
     def gc_horizon(self) -> int:
         """Highest lsn below which arriving events must be dropped as
@@ -356,7 +323,7 @@ class IcebergTable:
             )
 
     def applied_epochs(self) -> EpochSet:
-        ranges, ledger, _ = self._epoch_ledger()
+        ranges, ledger = self._epoch_ledger()
         # keys inside a range are the retained attribution tail —
         # already covered; keeping them in `explicit` would
         # double-count len()/iter()
@@ -377,18 +344,19 @@ class IcebergTable:
         select (newest first, optional filters, LIMIT) answered from
         Iceberg's `.snapshots` metadata table joined with the
         `cdc.epoch.*` property ledger."""
-        _, ledger, _ = self._epoch_ledger()
+        _, ledger = self._epoch_ledger()
         # one snapshot can carry several epochs (millisecond commit
         # ties are attributed via .refs, but a caller may also batch),
         # so the inversion is snapshot -> LIST — a dict comprehension
         # would silently drop colliding epochs. snapshot_id 0 marks a
         # state-no-op merge (no snapshot produced): applied in the
         # ledger, present in applied_epochs(), but on no snapshot row.
-        # Epochs below the rollup watermark no longer carry snapshot
-        # attribution (their properties were unset); their snapshots
-        # list epochs: [] — the same information loss SnapshotTable
-        # accepts when its EpochSet compacts, and the latest-jobs
-        # queries this surface serves only read the recent window.
+        # Range-covered epochs older than the attribution window no
+        # longer carry snapshot attribution (their properties were
+        # unset); their snapshots list epochs: [] — the same
+        # information loss SnapshotTable accepts when its EpochSet
+        # compacts, and the latest-jobs queries this surface serves
+        # only read the recent window.
         by_snap: dict[int, list[tuple[int, int]]] = {}
         for e, (snap, ev) in ledger.items():
             if snap:
@@ -427,31 +395,32 @@ class IcebergTable:
         self,
         winners: DataFrame,
         epoch: int | list[int] | None = None,
-        checkpoint_df: DataFrame | list[dict] | None = None,
+        checkpoint_rows: list[dict] | None = None,
         op_col: str = "op",
         lsn_col: str | None = None,
-        extra_properties: dict[str, Any] | None = None,
         stats: dict[str, Any] | None = None,
-        key_col: str | None = None,
         touched_buckets: list[int] | None = None,
         dedupe_source: bool = False,
     ) -> CommitResult:
         """SnapshotTable.merge surface over Iceberg SQL, so the same
         Replayer drives either sink (north rule: exactly-once MERGE
-        upserts into Iceberg). Differences, all documented:
-        ``touched_buckets`` is accepted and ignored (Iceberg's own
-        bucket-partition pruning replaces the manifest-window
-        optimization); ``lsn_col`` adds the row-level LWW guard to the
-        MERGE arms when the target stores the column;
-        ``dedupe_source=True`` dropDuplicates the source on the key
-        (MERGE requires unique source keys); ``checkpoint_df`` rows
-        (list of lineage dicts) land as `cdc.ckpt.<p>` properties."""
+        upserts into Iceberg). Differences, all documented: the merge
+        key is the first column of ``winners`` (the Replayer's key-first
+        convention); ``touched_buckets`` is accepted and ignored
+        (Iceberg's own bucket-partition pruning replaces the
+        manifest-window optimization — the parameter exists so one
+        Replayer call serves both sinks); ``lsn_col`` adds the
+        row-level LWW guard to the MERGE arms when the target stores
+        the column; ``dedupe_source=True`` dropDuplicates the source on
+        the key (MERGE requires unique source keys);
+        ``checkpoint_rows`` (lineage dicts) land as `cdc.ckpt.<p>`
+        properties."""
         epochs = (
             None if epoch is None
             else [int(epoch)] if isinstance(epoch, int)
             else [int(e) for e in epoch]
         )
-        ranges, ledger, legacy_present = self._epoch_ledger()
+        ranges, ledger = self._epoch_ledger()
 
         def _applied(e: int) -> bool:
             return any(b <= e < w for b, w in ranges) or e in ledger
@@ -466,8 +435,7 @@ class IcebergTable:
         for f in winners.schema.fields:
             if f.name not in target_cols and f.name != op_col:
                 self.spark.sql(add_column_sql(self.identifier, f.name, f.dataType))
-        # explicit key_col wins; else the key-first convention
-        key = key_col or [f.name for f in winners.schema.fields][0]
+        key = winners.columns[0]
         if dedupe_source:
             winners = winners.dropDuplicates([key])
         winners.createOrReplaceTempView("_cdc_source")
@@ -479,17 +447,12 @@ class IcebergTable:
         # attributing "the latest snapshot" would stamp the epoch onto
         # the PREVIOUS commit. snapshot_id 0 = applied-but-no-op.
         snap = post if post is not None and post != pre else 0
-        if checkpoint_df is not None:
-            # the declared surface takes a DataFrame too (SnapshotTable
-            # parity); collecting is bounded — lineage is n_buckets rows
-            rows = (
-                [r.asDict() for r in checkpoint_df.collect()]
-                if isinstance(checkpoint_df, DataFrame)
-                else list(checkpoint_df)
-            )
-            for i in range(0, len(rows), 100):
+        if checkpoint_rows is not None:
+            for i in range(0, len(checkpoint_rows), 100):
                 self.spark.sql(
-                    checkpoint_property_sql(self.identifier, rows[i : i + 100])
+                    checkpoint_property_sql(
+                        self.identifier, checkpoint_rows[i : i + 100]
+                    )
                 )
         if epochs:
             # Stamp AFTER the MERGE commits. A crash in the window
@@ -519,35 +482,16 @@ class IcebergTable:
             # roll contiguous runs into the ranges property so the
             # per-epoch ledger stays O(fragmentation), not O(epochs):
             # without this, 10^5 epochs = 10^5 table properties and
-            # every merge's applied-check scans all of them
-            new_ranges, still_sparse = rollup_epochs(
-                ranges, set(ledger) | set(epochs)
-            )
-            # a length-1 legacy range normalizes to a SPARSE member; if
-            # no per-epoch key exists for it (it predates the ranges
-            # protocol), re-stamp one before the legacy pair is retired
-            # below, or its membership would be lost
-            for e in still_sparse:
-                if e not in ledger and e not in epochs:
-                    self.spark.sql(epoch_property_sql(self.identifier, e, 0, 0))
-            # compare against the NORMALIZED current ranges: the raw
-            # list may carry the appended legacy pair, which would read
-            # as a difference forever and restamp on every merge
-            cur_ranges, _ = rollup_epochs(ranges, set())
-            if new_ranges != cur_ranges or legacy_present:
+            # every merge's applied-check scans all of them. Runs of
+            # length >= 2 become/extend/MERGE ranges (a late-filled gap
+            # joins its neighbors); singletons stay per-epoch keys. The
+            # stored ranges are always normalized, so they compare as is.
+            new_ranges, _ = _normalize_epochs(ranges, set(ledger) | set(epochs))
+            if new_ranges != ranges:
                 # ONE atomic stamp; a crash before the unsets below
                 # leaves covered keys standing — membership unchanged
                 # (range ∪ keys), swept by the next merge
                 self.spark.sql(ranges_property_sql(self.identifier, new_ranges))
-            if legacy_present:
-                # retire the pre-ranges two-stamp pair: its coverage
-                # just folded into cdc.epoch.ranges (stamped above
-                # unconditionally when legacy was present), so the keys
-                # would otherwise linger forever
-                self.spark.sql(
-                    f"ALTER TABLE {self.identifier} UNSET TBLPROPERTIES "
-                    "('cdc.epoch.base', 'cdc.epoch.watermark')"
-                )
             # unset range-covered keys EXCEPT a recent window per range
             # (their membership is already covered; keeping each
             # range's newest tail preserves commit_log's

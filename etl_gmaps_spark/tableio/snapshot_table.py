@@ -63,8 +63,9 @@ Scale design:
     folded into a single consolidated manifest. The commit ledger
     keeps full rows for the newest ``ledger_keep`` commits and rolls
     older rows into an aggregate summary; the applied-epoch set is
-    stored as a contiguous watermark + sparse explicit list, so a
-    10^7-epoch replay stores one integer, not 10^7.
+    stored as a sorted list of half-open ``[b, w)`` epoch ranges plus
+    a sparse list of singletons, so a 10^7-epoch contiguous replay
+    stores one integer pair, not 10^7 entries.
   * commit = data files first, then manifest, then snapshot json
     (O_EXCL — two racing writers cannot both create v{N}.json), then
     pointer rename (atomic on POSIX). A crash before the pointer flip
@@ -72,9 +73,15 @@ Scale design:
     unreferenced files — the replay driver re-applies the epoch
     idempotently, and the failure is recorded in the lineage sidecar.
   * snapshot ``properties`` carry the commit-epoch ledger
-    (``epochs`` watermark+list and per-commit stats), mirroring the
-    reference's idempotent sink (ON CONFLICT DO NOTHING,
+    (``epoch_ranges`` + sparse ``epochs``, and per-commit stats),
+    mirroring the reference's idempotent sink (ON CONFLICT DO NOTHING,
     postgres/resultwriter.go:83) as Iceberg snapshot-summary metadata.
+  * every snapshot carries ``format_version`` (FORMAT_VERSION, stamped
+    at create() and copied forward by every commit). ``snapshot()``
+    refuses any other or missing version, so there is exactly one
+    on-disk layout: manifest entries always carry per-file sizes, data
+    dirs always carry the attempt nonce, and the epoch ledger is always
+    the range list above.
 """
 
 from __future__ import annotations
@@ -83,7 +90,7 @@ import json
 import os
 import uuid
 from dataclasses import dataclass
-from typing import Any, Iterator
+from typing import Any, Iterable, Iterator
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -117,6 +124,11 @@ META_COLS = (LSN_COL, DELETED_COL)
 # operate on a table stamped with a different id.
 BUCKET_HASH = "murmur3_pmod_v1"
 
+# The on-disk snapshot layout this engine reads and writes. Any change
+# to the snapshot, manifest or ledger layout MUST bump this number;
+# snapshot() refuses a table stamped with another (or no) version.
+FORMAT_VERSION = 1
+
 MANIFEST_COMPACT_AT = 32  # fold the manifest list when it grows past this
 LEDGER_KEEP_DEFAULT = 64  # full per-commit ledger rows kept before roll-up
 # MoR reconcile: below this total delta FILE size the delta KEY SET
@@ -135,6 +147,10 @@ class CommitConflict(Exception):
 
 class BucketHashMismatch(Exception):
     """Table was persisted under a different bucket hash function."""
+
+
+class FormatVersionMismatch(Exception):
+    """Table snapshot was written in a different (or unstamped) layout."""
 
 
 @dataclass
@@ -195,7 +211,7 @@ def _normalize_epochs(
 
 class EpochSet:
     """Applied-epoch membership: a small sorted list of half-open
-    ``[base, watermark)`` ranges plus an explicit sparse set. Every
+    ``[b, w)`` ranges plus an explicit sparse set. Every
     CONTIGUOUS epoch stream — the normal CDC replay, wherever its
     numbering starts (0, 1, a mid-binlog resume at 10^6, or the
     streaming ledger namespace at 10^9) — compacts to ONE range no
@@ -211,27 +227,11 @@ class EpochSet:
     __slots__ = ("ranges", "explicit")
 
     def __init__(
-        self,
-        watermark: int = 0,
-        explicit: set[int] | None = None,
-        base: int = 0,
-        ranges: list[tuple[int, int]] | None = None,
+        self, ranges: Iterable[Iterable[int]] = (), explicit: Iterable[int] = ()
     ):
-        if ranges is None:
-            ranges = [(int(base), int(watermark))] if int(watermark) > int(base) else []
         self.ranges, self.explicit = _normalize_epochs(
-            ranges, {int(e) for e in (explicit or ())}
+            list(ranges), {int(e) for e in explicit}
         )
-
-    # base/watermark view the LOWEST range — the common single-range
-    # case reads exactly like the old two-integer encoding
-    @property
-    def base(self) -> int:
-        return self.ranges[0][0] if self.ranges else 0
-
-    @property
-    def watermark(self) -> int:
-        return self.ranges[0][1] if self.ranges else 0
 
     def contiguous_in_band(
         self, bound: int = OUT_OF_BAND_EPOCH_BASE, above: int = -1
@@ -245,10 +245,13 @@ class EpochSet:
         every epoch at or below it is entirely below the persisted GC
         horizon, so its events can never reach row-level apply (the
         horizon filter drops them) — fragmentation down there (e.g. a
-        consumed-but-fully-stale segment) is equally vacuous."""
-        return (
-            len([r for r in self.ranges if r[0] < bound and r[1] > above + 1]) <= 1
-            and not any(above < e < bound for e in self.explicit)
+        consumed-but-fully-stale segment) is equally vacuous. A gap
+        between two in-band ranges is vacuous only when it lies wholly
+        at or below ``above``, i.e. the later range starts at or below
+        ``above + 1``."""
+        in_band = [r for r in self.ranges if r[0] < bound]
+        return all(b <= above + 1 for b, _ in in_band[1:]) and not any(
+            above < e < bound for e in self.explicit
         )
 
     def __contains__(self, e) -> bool:
@@ -272,18 +275,7 @@ class EpochSet:
 
 
 def _epoch_set(props: dict[str, Any]) -> EpochSet:
-    if "epoch_ranges" in props:
-        return EpochSet(
-            ranges=[(int(b), int(w)) for b, w in props["epoch_ranges"]],
-            explicit=props.get("epochs", []),
-        )
-    # legacy layouts: (base, watermark, sparse) from round 5 interim,
-    # or the round-4 zero-anchored watermark — identical semantics
-    return EpochSet(
-        props.get("epochs_watermark", 0),
-        props.get("epochs", []),
-        props.get("epochs_base", 0),
-    )
+    return EpochSet(props["epoch_ranges"], props["epochs"])
 
 
 def _store_epochs(props: dict[str, Any], es: EpochSet) -> None:
@@ -295,27 +287,20 @@ def _store_epochs(props: dict[str, Any], es: EpochSet) -> None:
     ranges, sparse = _normalize_epochs(es.ranges, es.explicit)
     props["epoch_ranges"] = [[b, w] for b, w in ranges]
     props["epochs"] = sorted(sparse)
-    # superseded legacy keys: a stale base/watermark pair alongside
-    # epoch_ranges would shadow-claim epochs on old readers
-    props.pop("epochs_base", None)
-    props.pop("epochs_watermark", None)
 
 
-def _entry(base: list[str], deltas: list[str] | None = None,
-           delta_sizes: list[int] | None = None) -> dict:
-    """Manifest entry with per-file sizes captured at WRITE time, so
-    maintenance_plan's delta-ratio check reads manifest metadata instead
-    of os.stat'ing every file — at 10^5 buckets × chain 8 the plan runs
-    after every MoR commit and 800k stat calls per commit would dwarf
-    the commit itself. Entries from pre-size manifests lack the keys;
-    readers fall back to os.stat for those (migrated on next rewrite)."""
-    deltas = deltas or []
+def _entry(base: list[str]) -> dict:
+    """Delta-free manifest entry with per-file sizes captured at WRITE
+    time, so maintenance_plan's delta-ratio check and the MoR reconcile
+    broadcast test read manifest metadata instead of os.stat'ing every
+    file — at 10^5 buckets × chain 8 the plan runs after every MoR
+    commit and 800k stat calls per commit would dwarf the commit
+    itself."""
     return {
         "base": list(base),
-        "deltas": list(deltas),
+        "deltas": [],
         "base_sizes": [os.path.getsize(f) for f in base],
-        "delta_sizes": list(delta_sizes) if delta_sizes is not None
-        else [os.path.getsize(f) for f in deltas],
+        "delta_sizes": [],
     }
 
 
@@ -392,6 +377,7 @@ class SnapshotTable:
             "key_col": key_col,
             "n_buckets": n_buckets,
             "bucket_hash": BUCKET_HASH,
+            "format_version": FORMAT_VERSION,
             "merge_mode": merge_mode,
             "ledger_keep": ledger_keep,
             "manifests": manifests,
@@ -416,10 +402,18 @@ class SnapshotTable:
     def snapshot(self, version: int | None = None) -> dict[str, Any]:
         v = version if version is not None else self._current_version()
         with open(os.path.join(self.meta_dir, f"v{v}.json")) as fh:
-            return json.load(fh)
+            snap = json.load(fh)
+        stored = snap.get("format_version")
+        if stored != FORMAT_VERSION:
+            raise FormatVersionMismatch(
+                f"snapshot v{v} of table at {self.root} has format_version "
+                f"{stored!r}; this engine reads and writes only "
+                f"{FORMAT_VERSION!r}. Recreate the table with create()."
+            )
+        return snap
 
     def _check_bucket_hash(self, snap: dict[str, Any]) -> None:
-        stored = snap.get("bucket_hash", BUCKET_HASH)
+        stored = snap["bucket_hash"]
         if stored != BUCKET_HASH:
             raise BucketHashMismatch(
                 f"table at {self.root} was bucketed with {stored!r}; this engine "
@@ -469,31 +463,16 @@ class SnapshotTable:
     def _resolve(self, snap: dict[str, Any]) -> dict[str, dict]:
         """bucket -> {"base": [...], "deltas": [...]}; newest manifest
         entry for a bucket wins (each entry is self-contained)."""
-        if "manifests" not in snap:
-            # pre-manifest layout: v{N}.json carried the full bucket ->
-            # files map inline. Migrate on read (base only, no deltas —
-            # MoR postdates manifests) instead of silently resolving an
-            # old table as EMPTY, which would let the next merge commit
-            # a snapshot that drops every pre-existing row.
-            if "files" in snap:
-                return {
-                    b: {"base": list(fl), "deltas": []}
-                    for b, fl in snap["files"].items()
-                }
-            raise ValueError(
-                f"snapshot v{snap.get('version')} has neither 'manifests' "
-                "nor legacy 'files' — refusing to resolve it as empty"
-            )
         out: dict[str, dict] = {}
-        for path in snap.get("manifests", []):
+        for path in snap["manifests"]:
             out.update(self._load_manifest(path))
         return out
 
     def files_map(self, version: int | None = None) -> dict[str, list[str]]:
-        """bucket -> every live data file (base + deltas). The public
-        replacement for the pre-manifest ``snapshot()["files"]``."""
+        """bucket -> every live data file (base + deltas), resolved from
+        the snapshot's manifest list."""
         return {
-            b: list(e.get("base", [])) + list(e.get("deltas", []))
+            b: e["base"] + e["deltas"]
             for b, e in self._resolve(self.snapshot(version)).items()
         }
 
@@ -501,7 +480,7 @@ class SnapshotTable:
         return [
             f
             for e in self._resolve(snap).values()
-            for f in list(e.get("base", [])) + list(e.get("deltas", []))
+            for f in e["base"] + e["deltas"]
         ]
 
     # ------------------------------------------------------------- read
@@ -544,7 +523,7 @@ class SnapshotTable:
         commit cannot write its own snapshot. Rows older than the
         roll-up horizon are summarized in properties["commits_rollup"].
         """
-        rows = [dict(c) for c in self.properties().get("commits", [])]
+        rows = [dict(c) for c in self.properties()["commits"]]
         rows += self._failures()
         rows.sort(key=lambda c: (-c["snapshot"], c.get("status") != "ok"))
         if status is not None:
@@ -603,7 +582,7 @@ class SnapshotTable:
         sel = (
             resolved
             if buckets is None
-            else {str(b): resolved.get(str(b), {}) for b in buckets}
+            else {str(b): resolved[str(b)] for b in buckets if str(b) in resolved}
         )
         # Only delta-bearing buckets need the per-key window; pure-CoW
         # buckets (the vast majority after a small batch or a compact())
@@ -611,30 +590,27 @@ class SnapshotTable:
         # the reconcile shuffle to ~delta-touched data instead of
         # re-windowing the whole table on every read.
         clean = [
-            f for e in sel.values() if not e.get("deltas")
-            for f in e.get("base", [])
+            f for e in sel.values() if not e["deltas"]
+            for f in e["base"]
         ]
         dirty_base = [
-            f for e in sel.values() if e.get("deltas")
-            for f in e.get("base", [])
+            f for e in sel.values() if e["deltas"]
+            for f in e["base"]
         ]
-        deltas = [f for e in sel.values() for f in e.get("deltas", [])]
+        deltas = [f for e in sel.values() for f in e["deltas"]]
         if not deltas:
             return self._read_files(clean, schema)
         from pyspark.sql import Window as W
 
         key_col = snap["key_col"]
-        # Anchored to the table layout (…/s{N}[-nonce]/_bucket=…): an
+        # Anchored to the table layout (…/s{N}-{nonce}/_bucket=…): an
         # unanchored /s(\d+)/ took the FIRST match anywhere in the
         # absolute path, so a root containing /s3/ or /s2024/ yielded a
-        # wrong constant sequence for every file. Legacy dirs (no nonce)
-        # still match via the optional group.
+        # wrong constant sequence for every file.
         seq = F.regexp_extract(
-            F.input_file_name(), r"/s(\d+)(?:-[0-9a-f]{8})?/_bucket=", 1
+            F.input_file_name(), r"/s(\d+)-[0-9a-f]{8}/_bucket=", 1
         ).cast("long")
-        delta_bytes = sum(
-            os.path.getsize(f) for f in deltas if os.path.exists(f)
-        )
+        delta_bytes = sum(s for e in sel.values() for s in e["delta_sizes"])
         if delta_bytes <= MOR_BROADCAST_RECONCILE_BYTES:
             # Small-delta fast path (the common shape between compactions
             # at 10^10 scale: batch ≪ table). The delta key set broadcasts;
@@ -685,16 +661,10 @@ class SnapshotTable:
         self._check_bucket_hash(snap)
         return self._reconciled(snap, buckets=buckets)
 
-    def checkpoint(self, version: int | None = None) -> DataFrame | None:
-        snap = self.snapshot(version)
-        if not snap.get("checkpoint_file"):
-            return None
-        return self.spark.read.parquet(snap["checkpoint_file"])
-
     def checkpoint_rows(self, version: int | None = None) -> list[dict] | None:
         """Driver-side checkpoint read (no Spark job)."""
         snap = self.snapshot(version)
-        if not snap.get("checkpoint_file"):
+        if not snap["checkpoint_file"]:
             return None
         return pq.read_table(snap["checkpoint_file"]).to_pylist()
 
@@ -741,7 +711,7 @@ class SnapshotTable:
         """Keep full rows for the newest ``keep`` commits; fold older
         rows into an aggregate (count/events/bytes/snapshot+epoch range)
         so the per-snapshot ledger is O(keep), not O(history)."""
-        commits = props.get("commits", [])
+        commits = props["commits"]
         if len(commits) <= keep:
             return
         old, props["commits"] = commits[:-keep], commits[-keep:]
@@ -777,16 +747,7 @@ class SnapshotTable:
         """Append one manifest for the touched buckets; consolidate the
         list when it exceeds MANIFEST_COMPACT_AT (Iceberg
         rewrite_manifests analog) so resolution stays O(1) files."""
-        if "manifests" not in snap:
-            # legacy inline-'files' snapshot: _resolve() migrates it for
-            # READS, but seeding the manifest list empty here would make
-            # this commit's snapshot reference ONLY the touched buckets —
-            # silently dropping every untouched bucket. Materialize the
-            # migrated map as a manifest first so the parent's full state
-            # survives the first post-upgrade merge/compact.
-            manifests = [self._write_manifest(version, self._resolve(snap))]
-        else:
-            manifests = list(snap.get("manifests", []))
+        manifests = list(snap["manifests"])
         if touched_entries:
             manifests.append(self._write_manifest(version, touched_entries))
         if len(manifests) > MANIFEST_COMPACT_AT:
@@ -796,7 +757,7 @@ class SnapshotTable:
             manifests = [self._write_manifest(version, resolved)]
         return manifests
 
-    def overwrite(self, df: DataFrame, properties_update: dict[str, Any] | None = None) -> CommitResult:
+    def overwrite(self, df: DataFrame) -> CommitResult:
         snap = self.snapshot()
         v = snap["version"] + 1
         files = self._write_buckets(df, v, snap["key_col"], snap["n_buckets"])
@@ -816,11 +777,6 @@ class SnapshotTable:
             # would leave merges failing even after a full rewrite)
             bucket_hash=BUCKET_HASH,
         )
-        new.pop("files", None)  # legacy inline map, superseded by manifests
-        if properties_update:
-            props = dict(snap["properties"])
-            props.update(properties_update)
-            new["properties"] = props
         self._commit_snapshot(new)
         n = sum(len(x) for x in files.values())
         return CommitResult(v, v, -1, n, None)
@@ -843,7 +799,7 @@ class SnapshotTable:
         snap = self.snapshot()
         self._check_bucket_hash(snap)
         resolved = self._resolve(snap)
-        with_deltas = [int(b) for b, e in resolved.items() if e.get("deltas")]
+        with_deltas = [int(b) for b, e in resolved.items() if e["deltas"]]
         if tombstones_before is None:
             todo = with_deltas if buckets is None else [b for b in buckets if int(b) in set(with_deltas)]
         elif buckets is None:
@@ -914,8 +870,8 @@ class SnapshotTable:
                 props["gc_horizon_epoch"] = max(
                     int(props.get("gc_horizon_epoch", -1)), in_band[-1][0] - 1
                 )
-        props["commits"] = props.get("commits", []) + [commit_info]
-        self._ledger_rollup(props, snap.get("ledger_keep", LEDGER_KEEP_DEFAULT))
+        props["commits"] = props["commits"] + [commit_info]
+        self._ledger_rollup(props, snap["ledger_keep"])
         new = dict(snap)
         new.update(
             version=v,
@@ -924,7 +880,6 @@ class SnapshotTable:
             manifests=self._next_manifests(snap, v, entries),
             properties=props,
         )
-        new.pop("files", None)  # legacy inline map, superseded by manifests
         self._commit_snapshot(new)
         return CommitResult(v, v, rows_written, len(todo), None, bytes_rewritten)
 
@@ -992,8 +947,7 @@ class SnapshotTable:
         sizes at write time (``base_sizes``/``delta_sizes``, see
         ``_entry``), so the plan is a pure manifest walk with NO stat
         calls and no Spark job, cheap enough after every commit even at
-        10^5 buckets (the r4 watch item). Pre-size manifest entries fall
-        back to os.stat and are migrated on their next rewrite.
+        10^5 buckets (the r4 watch item).
 
         Tombstone GC leg (VERDICT r4 #3) — opt-in via BOTH
         ``tombstone_ratio`` and ``tombstone_before``: also plan any
@@ -1010,7 +964,7 @@ class SnapshotTable:
         snap = self.snapshot()
         todo: set[int] = set()
         for b, e in self._resolve(snap).items():
-            deltas = e.get("deltas", [])
+            deltas = e["deltas"]
             if not deltas:
                 continue
             if max_chain is not None and len(deltas) >= max_chain:
@@ -1018,14 +972,7 @@ class SnapshotTable:
                 continue
             if max_delta_ratio is None:
                 continue
-
-            def _bytes(files: list[str], sizes: list[int] | None) -> int:
-                if sizes is not None and len(sizes) == len(files):
-                    return sum(sizes)
-                return sum(os.path.getsize(f) for f in files if os.path.exists(f))
-
-            dbytes = _bytes(deltas, e.get("delta_sizes"))
-            bbytes = _bytes(e.get("base", []), e.get("base_sizes"))
+            dbytes, bbytes = sum(e["delta_sizes"]), sum(e["base_sizes"])
             if dbytes >= max_delta_ratio * max(1, bbytes):
                 todo.add(int(b))
         if tombstone_ratio is not None and tombstone_before is not None:
@@ -1120,13 +1067,13 @@ class SnapshotTable:
             snap = self.snapshot(v)
             files = self._all_files(snap)
             referenced_any.update(files)
-            referenced_any.update(snap.get("manifests", []))
-            if snap.get("checkpoint_file"):
+            referenced_any.update(snap["manifests"])
+            if snap["checkpoint_file"]:
                 referenced_any.add(snap["checkpoint_file"])
             if v in keep:
                 live_files.update(files)
-                live_manifests.update(snap.get("manifests", []))
-                if snap.get("checkpoint_file"):
+                live_manifests.update(snap["manifests"])
+                if snap["checkpoint_file"]:
                     live_ckpts.add(snap["checkpoint_file"])
 
         def _orphan_guarded(p: str) -> bool:
@@ -1219,10 +1166,9 @@ class SnapshotTable:
         self,
         winners: DataFrame,
         epoch: int | list[int] | None = None,
-        checkpoint_df: DataFrame | list[dict] | None = None,
+        checkpoint_rows: list[dict] | None = None,
         op_col: str = "op",
         lsn_col: str = "lsn",
-        extra_properties: dict[str, Any] | None = None,
         stats: dict[str, Any] | None = None,
         touched_buckets: list[int] | None = None,
         dedupe_source: bool = False,
@@ -1244,6 +1190,14 @@ class SnapshotTable:
         sort-merge join's own sort requirement — the dedupe is
         effectively free. This lets the replay hot path skip its own
         pre-merge max_by shuffle entirely.
+
+        ``checkpoint_rows`` (per-partition lineage dicts, see
+        CHECKPOINT_PA_SCHEMA) is written with pyarrow as this commit's
+        checkpoint file; when omitted the parent's checkpoint carries
+        forward. ``stats`` is merged into this commit's ledger row.
+        ``touched_buckets`` (the buckets the winners hash to, when the
+        caller already knows them) spares a CoW merge one
+        ``distinct().collect()`` job over the batch.
 
         Two idempotence layers:
           * batch level: if ``epoch`` (one id or a group applied as one
@@ -1268,8 +1222,8 @@ class SnapshotTable:
             return CommitResult(snap["version"], snap["snapshot_id"], 0, 0, epochs[-1])
         try:
             return self._merge_inner(
-                winners, epochs, snap, checkpoint_df, op_col, lsn_col,
-                extra_properties, stats, touched_buckets, dedupe_source,
+                winners, epochs, snap, checkpoint_rows, op_col, lsn_col,
+                stats, touched_buckets, dedupe_source,
             )
         except Exception as exc:
             if not isinstance(exc, CommitConflict):
@@ -1289,16 +1243,15 @@ class SnapshotTable:
         winners: DataFrame,
         epochs: list[int],
         snap: dict[str, Any],
-        checkpoint_df,
+        checkpoint_rows,
         op_col: str,
         lsn_col: str,
-        extra_properties,
         stats,
         touched_buckets,
         dedupe_source: bool,
     ) -> CommitResult:
         key_col, n_buckets = snap["key_col"], snap["n_buckets"]
-        mode = snap.get("merge_mode", "cow")
+        mode = snap["merge_mode"]
         schema = T.StructType.fromJson(snap["schema"])
 
         # additive schema evolution: source columns the table lacks
@@ -1371,23 +1324,13 @@ class SnapshotTable:
             resolved = self._resolve(snap)
             entries = {}
             for b in touched:
-                prev = resolved.get(str(b), {})
-                prev_d = list(prev.get("deltas", []))
+                prev = resolved.get(str(b)) or _entry([])
                 new_d = new_files.get(str(b), [])
-                prev_b = list(prev.get("base", []))
-                # carry prior sizes when the prior entry has them
-                # (pre-size manifests: stat once here, cached thereafter)
-                prev_bs = prev.get("base_sizes")
-                if prev_bs is None or len(prev_bs) != len(prev_b):
-                    prev_bs = [os.path.getsize(f) for f in prev_b]
-                prev_ds = prev.get("delta_sizes")
-                if prev_ds is None or len(prev_ds) != len(prev_d):
-                    prev_ds = [os.path.getsize(f) for f in prev_d]
                 entries[str(b)] = {
-                    "base": prev_b,
-                    "deltas": prev_d + new_d,
-                    "base_sizes": list(prev_bs),
-                    "delta_sizes": list(prev_ds)
+                    "base": prev["base"],
+                    "deltas": prev["deltas"] + new_d,
+                    "base_sizes": prev["base_sizes"],
+                    "delta_sizes": prev["delta_sizes"]
                     + [os.path.getsize(f) for f in new_d],
                 }
         else:
@@ -1467,34 +1410,25 @@ class SnapshotTable:
             es.explicit.update(int(e) for e in epochs)
             _store_epochs(props, es)
             commit_info["epochs"] = epochs
-        props["commits"] = props.get("commits", []) + [commit_info]
-        self._ledger_rollup(props, snap.get("ledger_keep", LEDGER_KEEP_DEFAULT))
-        if extra_properties:
-            props.update(extra_properties)
+        props["commits"] = props["commits"] + [commit_info]
+        self._ledger_rollup(props, snap["ledger_keep"])
 
-        ckpt_file = snap.get("checkpoint_file")
-        if checkpoint_df is not None:
+        ckpt_file = snap["checkpoint_file"]
+        if checkpoint_rows is not None:  # driver-local rows: no Spark job
             ckpt_file = os.path.join(self.meta_dir, f"ckpt-{v}.parquet")
-            if isinstance(checkpoint_df, list):  # driver-local rows: no Spark job
-                tbl = pa.Table.from_pylist(checkpoint_df, schema=CHECKPOINT_PA_SCHEMA)
-                pq.write_table(tbl, ckpt_file)
-            else:
-                checkpoint_df.coalesce(1).write.mode("overwrite").parquet(ckpt_file)
+            tbl = pa.Table.from_pylist(checkpoint_rows, schema=CHECKPOINT_PA_SCHEMA)
+            pq.write_table(tbl, ckpt_file)
 
-        new = {
-            "version": v,
-            "snapshot_id": v,
-            "parent": snap["version"],
-            "schema": json.loads(schema.json()),
-            "key_col": key_col,
-            "n_buckets": n_buckets,
-            "bucket_hash": snap.get("bucket_hash", BUCKET_HASH),
-            "merge_mode": mode,
-            "ledger_keep": snap.get("ledger_keep", LEDGER_KEEP_DEFAULT),
-            "manifests": self._next_manifests(snap, v, entries),
-            "properties": props,
-            "checkpoint_file": ckpt_file,
-        }
+        new = dict(snap)
+        new.update(
+            version=v,
+            snapshot_id=v,
+            parent=snap["version"],
+            schema=json.loads(schema.json()),
+            manifests=self._next_manifests(snap, v, entries),
+            properties=props,
+            checkpoint_file=ckpt_file,
+        )
         if _prof_d is not None:
             _prof_d["post_write"] = _time.monotonic() - _t
             print(f"[prof]   post_write(footers+ckpt)={_prof_d['post_write']:.2f}s", flush=True)

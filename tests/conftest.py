@@ -14,7 +14,13 @@ from etl_gmaps_spark.session import get_spark  # noqa: E402
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("etl_gmaps_spark-tests", cpus=8, shuffle_partitions=8)
+    # 6g driver heap: get_spark's 48g default lets the shared session
+    # JVM outgrow a 15 GB host next to the subprocess JVMs that the
+    # spark-submit and Iceberg-harness tests start
+    s = get_spark(
+        "etl_gmaps_spark-tests", cpus=8, shuffle_partitions=8,
+        extra_conf={"spark.driver.memory": "6g"},
+    )
     yield s
 
 

@@ -21,7 +21,13 @@ from etl_gmaps_spark.datagen import gen_base, gen_changelog
 from etl_gmaps_spark.oracle import replay_oracle
 from etl_gmaps_spark.schemas import TARGET_SCHEMA
 from etl_gmaps_spark.streaming.replay import Replayer
-from etl_gmaps_spark.tableio import BucketHashMismatch, EpochSet, SnapshotTable
+from etl_gmaps_spark.tableio import (
+    BucketHashMismatch,
+    EpochSet,
+    FormatVersionMismatch,
+    SnapshotTable,
+)
+from etl_gmaps_spark.tableio.snapshot_table import FORMAT_VERSION
 from tests.conftest import assert_table_equal
 
 
@@ -81,8 +87,7 @@ def test_maintenance_plan_uses_manifest_sizes(spark, tmp_path, monkeypatch):
     """r4 watch item: manifests cache per-file sizes at write time, so
     maintenance_plan is a pure manifest walk — zero os.stat calls at
     10^5-bucket scale. Proven by making getsize explode: the plan must
-    still produce the same answer. Legacy entries (no size keys) fall
-    back to stat."""
+    still produce the same answer."""
     base = gen_base(spark, n_docs=100, seed=31)
     log = gen_changelog(spark, n_docs=100, n_events=1000, seed=31, epoch_size=250, dup_epochs=())
     table = SnapshotTable.create(
@@ -105,18 +110,6 @@ def test_maintenance_plan_uses_manifest_sizes(spark, tmp_path, monkeypatch):
         raise AssertionError("maintenance_plan called os.stat despite cached sizes")
 
     monkeypatch.setattr(st_mod.os.path, "getsize", boom)
-    assert table.maintenance_plan(max_chain=2) == want
-    monkeypatch.undo()
-
-    # legacy manifests (pre-size entries) still work via the stat path
-    m_path = table.snapshot()["manifests"][-1]
-    m = json.load(open(m_path))
-    for e in m["buckets"].values():
-        e.pop("base_sizes", None)
-        e.pop("delta_sizes", None)
-    with open(m_path, "w") as fh:
-        json.dump(m, fh)
-    table._manifest_cache.clear()
     assert table.maintenance_plan(max_chain=2) == want
 
 
@@ -258,22 +251,40 @@ def test_epoch_watermark_compaction(spark, tmp_path):
 
 
 # --------------------------------------------------- hash stamp, lineage
-def test_bucket_hash_mismatch_fails_loudly(spark, tmp_path):
+@pytest.mark.parametrize(
+    "field,value,exc",
+    [
+        ("bucket_hash", "xxhash64_v0", BucketHashMismatch),
+        ("format_version", FORMAT_VERSION + 1, FormatVersionMismatch),
+        ("format_version", None, FormatVersionMismatch),  # unstamped
+    ],
+    ids=["bucket_hash", "format_version", "format_unstamped"],
+)
+def test_bucket_hash_mismatch_fails_loudly(spark, tmp_path, field, value, exc):
+    """A table stamped with another bucket hash or on-disk format (or
+    with no format stamp at all) is refused, not silently misread."""
     base = gen_base(spark, n_docs=40, seed=6)
     table = make_table(spark, tmp_path, base, n_buckets=4)
-    # simulate a table persisted under a different hash function
     snap = table.snapshot()
-    snap["bucket_hash"] = "xxhash64_v0"
+    if value is None:
+        del snap[field]
+    else:
+        snap[field] = value
     snap["version"] += 1
     table._commit_snapshot(snap)
-    src = spark.createDataFrame(
-        [("doc-00000001", [1], 1, "web", "U", 10, 0, _dt.datetime(2023, 11, 14, 2, 0, 0))],
-        "doc_id string, tokens array<int>, n_tok int, source string, op string, lsn long, epoch long, ts timestamp",
-    )
-    with pytest.raises(BucketHashMismatch):
-        table.merge(src, epoch=1)
-    with pytest.raises(BucketHashMismatch):
+    with pytest.raises(exc):
+        table.merge(_one_row_src(spark), epoch=1)
+    with pytest.raises(exc):
         table.read_buckets([0])
+    with pytest.raises(exc):
+        table.compact()
+    if field == "format_version":
+        with pytest.raises(exc):
+            table.read()
+    else:
+        # a full scan does not depend on bucket assignment: read() stays
+        # open so overwrite(read(...)) can remediate the table
+        assert table.read().count() == 40
 
 
 def test_failed_commit_lineage(spark, tmp_path):
@@ -418,24 +429,6 @@ def test_mor_rejects_null_lsn_values(spark, tmp_path):
         table.merge(src, epoch=1)
 
 
-def test_resolve_migrates_legacy_files_layout(spark, tmp_path):
-    """A snapshot written by pre-manifest code (inline 'files' map, no
-    'manifests' key) must resolve to its real files — not silently as
-    an empty table, which would let the next merge drop every row."""
-    base = gen_base(spark, n_docs=50, seed=41)
-    table = make_table(spark, tmp_path, base)
-    snap = dict(table.snapshot())
-    legacy_files = {b: list(fl) for b, fl in table.files_map().items()}
-    snap.pop("manifests")
-    snap["files"] = legacy_files
-    entries = table._resolve(snap)
-    assert entries == {b: {"base": fl, "deltas": []} for b, fl in legacy_files.items()}
-    # and a snapshot with neither layout fails loudly
-    snap.pop("files")
-    with pytest.raises(ValueError, match="refusing"):
-        table._resolve(snap)
-
-
 def _one_row_src(spark, doc_id="doc-00000001", tokens=(1,), lsn=10, epoch=0):
     return spark.createDataFrame(
         [(doc_id, list(tokens), len(tokens), "web", "U", lsn, epoch,
@@ -443,48 +436,6 @@ def _one_row_src(spark, doc_id="doc-00000001", tokens=(1,), lsn=10, epoch=0):
         "doc_id string, tokens array<int>, n_tok int, source string, "
         "op string, lsn long, epoch long, ts timestamp",
     )
-
-
-def test_merge_after_legacy_snapshot_keeps_untouched_buckets(spark, tmp_path):
-    """ADVICE r3 (high): the first merge on a pre-manifest snapshot must
-    materialize the migrated inline-'files' map as a manifest — not seed
-    the manifest list empty, which silently dropped every bucket the
-    commit didn't touch (1-key merge into 8 buckets left 1 bucket)."""
-    base = gen_base(spark, n_docs=200, seed=7)
-    table = make_table(spark, tmp_path, base, n_buckets=8)
-    n_before = table.read().count()
-    # rewrite v1.json in the legacy layout: inline 'files', no 'manifests'
-    snap = table.snapshot()
-    files = {b: fl for b, fl in table.files_map().items()}
-    snap.pop("manifests")
-    snap["files"] = files
-    with open(os.path.join(table.meta_dir, "v1.json"), "w") as fh:
-        json.dump(snap, fh)
-    table._manifest_cache.clear()
-    table.merge(_one_row_src(spark), epoch=1)
-    assert len(table.files_map()) == 8  # every bucket survived
-    assert table.read().count() == n_before  # upsert of an existing key
-    assert "files" not in table.snapshot()  # migrated to manifests
-
-
-def test_compact_after_legacy_snapshot_keeps_untouched_buckets(spark, tmp_path):
-    """Same legacy-migration guarantee on the compact() path (it shares
-    _next_manifests with merge). A legacy CoW table upgraded to MoR via
-    one delta merge then compacted must keep all buckets."""
-    base = gen_base(spark, n_docs=200, seed=17)
-    table = make_table(spark, tmp_path, base, n_buckets=8, merge_mode="mor")
-    n_before = table.read().count()
-    snap = table.snapshot()
-    files = {b: [f for f in e["base"]] for b, e in table._resolve(snap).items()}
-    snap.pop("manifests")
-    snap["files"] = files
-    with open(os.path.join(table.meta_dir, "v1.json"), "w") as fh:
-        json.dump(snap, fh)
-    table._manifest_cache.clear()
-    table.merge(_one_row_src(spark), epoch=1)  # writes one delta
-    table.compact()
-    assert len(table.files_map()) == 8
-    assert table.read().count() == n_before
 
 
 def test_losing_racer_cannot_clobber_winner_files(spark, tmp_path):

@@ -1,8 +1,8 @@
 """Property tests for the pure codec/arithmetic kernels — no Spark.
 
-1. Iceberg epoch-ledger rollup: membership is invariant under rollup,
-   the watermark only advances, and dropped keys are exactly the ones
-   the watermark now covers.
+1. Epoch-ledger rollup (_normalize_epochs, shared by both sinks):
+   membership is invariant under rollup, and the output is canonical —
+   sorted, disjoint, non-adjacent ranges plus singletons outside them.
 2. BMP/WAV decoders on corrupted payloads: every failure is the
    promised ValueError (task code must never leak ZeroDivisionError /
    struct.error / slice errors into a Spark executor), and successful
@@ -22,7 +22,7 @@ from etl_gmaps_spark.operators.multimodal import (
     _encode_wav,
     _resize_pixels,
 )
-from etl_gmaps_spark.tableio.iceberg_table import rollup_epochs
+from etl_gmaps_spark.tableio.snapshot_table import _normalize_epochs
 
 
 @given(
@@ -36,11 +36,11 @@ from etl_gmaps_spark.tableio.iceberg_table import rollup_epochs
     applied=st.sets(st.integers(min_value=0, max_value=100), max_size=40),
 )
 def test_rollup_epochs_invariants(ranges, applied):
-    # arbitrary (possibly overlapping/empty) input ranges — the reader
-    # may hand rollup an unnormalized list (legacy base/watermark pair
-    # appended to the ranges property)
+    # arbitrary (possibly overlapping/empty) input ranges: the
+    # normalizer must be exact on any input, not only on the
+    # normalized lists the ledgers store
     ranges = [(b, b + ln) for b, ln in ranges]
-    new_ranges, sparse = rollup_epochs(ranges, applied)
+    new_ranges, sparse = _normalize_epochs(ranges, applied)
 
     def member_before(e):
         return any(b <= e < w for b, w in ranges) or e in applied

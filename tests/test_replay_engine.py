@@ -4,6 +4,7 @@ exactly-once epochs, crash-resume, schema evolution, checkpoint lineage.
 
 from __future__ import annotations
 
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -86,7 +87,7 @@ def test_checkpoint_lineage(spark, tmp_path):
     log = gen_changelog(spark, n_docs=200, n_events=2000, seed=11, epoch_size=500)
     table = make_table(spark, tmp_path, base)
     Replayer(table).run(log)
-    ckpt = table.checkpoint().toPandas()
+    ckpt = pd.DataFrame(table.checkpoint_rows())
     assert set(ckpt.columns) == {"partition", "last_lsn", "rows_applied", "bytes", "epoch", "updated_at"}
     assert ckpt["last_lsn"].max() == 2000  # high-water mark == max lsn
     assert ckpt["rows_applied"].sum() == 2000  # dupes applied once

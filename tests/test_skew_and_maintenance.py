@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import os
 
+import pandas as pd
 from pyspark.sql import functions as F
 
 from etl_gmaps_spark.datagen import gen_base, gen_changelog
@@ -40,8 +41,8 @@ def test_salted_replay_on_skewed_log(spark, tmp_path):
     Replayer(t_plain).run(log)
     assert_table_equal(t_plain.read(), expected)
     # lineage identical regardless of salting
-    cs = t_salted.checkpoint().toPandas().sort_values("partition").reset_index(drop=True)
-    cp = t_plain.checkpoint().toPandas().sort_values("partition").reset_index(drop=True)
+    cs = pd.DataFrame(t_salted.checkpoint_rows()).sort_values("partition").reset_index(drop=True)
+    cp = pd.DataFrame(t_plain.checkpoint_rows()).sort_values("partition").reset_index(drop=True)
     assert (cs["rows_applied"] == cp["rows_applied"]).all()
     assert (cs["last_lsn"] == cp["last_lsn"]).all()
 
@@ -405,38 +406,38 @@ def test_iceberg_checkpoint_codec_roundtrip():
 
 
 def test_iceberg_epoch_rollup_arithmetic():
-    """rollup_epochs is the pure core of the Iceberg ledger bound (r5
-    review: one TBLPROPERTIES key per epoch forever = O(epochs) table
-    metadata and an O(epochs) scan before every merge)."""
-    from etl_gmaps_spark.tableio.iceberg_table import rollup_epochs
+    """_normalize_epochs is the pure core of the Iceberg ledger rollup
+    (r5 review: one TBLPROPERTIES key per epoch forever = O(epochs)
+    table metadata and an O(epochs) scan before every merge)."""
+    from etl_gmaps_spark.tableio.snapshot_table import _normalize_epochs
 
     # contiguous from zero: everything rolls into one range
-    assert rollup_epochs([], {0, 1, 2, 3}) == ([(0, 4)], set())
+    assert _normalize_epochs([], {0, 1, 2, 3}) == ([(0, 4)], set())
     # extends a prior range
-    assert rollup_epochs([(0, 4)], {4, 5}) == ([(0, 6)], set())
+    assert _normalize_epochs([(0, 4)], {4, 5}) == ([(0, 6)], set())
     # a gap splits; the singleton tail stays sparse
-    assert rollup_epochs([], {0, 1, 3}) == ([(0, 2)], {3})
+    assert _normalize_epochs([], {0, 1, 3}) == ([(0, 2)], {3})
     # NOT zero-based: any contiguous run compacts wherever it starts
     # (r5 review: an epoch-1-based or mid-binlog-resumed stream)
-    assert rollup_epochs([], {1, 2, 3}) == ([(1, 4)], set())
-    assert rollup_epochs([], {5000, 5001, 5003}) == ([(5000, 5002)], {5003})
+    assert _normalize_epochs([], {1, 2, 3}) == ([(1, 4)], set())
+    assert _normalize_epochs([], {5000, 5001, 5003}) == ([(5000, 5002)], {5003})
     # later epochs extend the same run
-    assert rollup_epochs([(5000, 5002)], {5002, 5003}) == ([(5000, 5004)], set())
+    assert _normalize_epochs([(5000, 5002)], {5002, 5003}) == ([(5000, 5004)], set())
     # an arrival BELOW an existing range never joins it while the gap
     # stands (membership must stay exact) — it stays sparse ...
-    assert rollup_epochs([(5000, 5004)], {0}) == ([(5000, 5004)], {0})
+    assert _normalize_epochs([(5000, 5004)], {0}) == ([(5000, 5004)], {0})
     # ... but a contiguous below-range run forms its OWN range (r5
     # review #2: independent namespaces — batch at 0.., streaming at
     # 10^9 — each compact instead of one growing sparse forever)
-    assert rollup_epochs([(1_000_000_000, 1_000_000_005)], {0, 1, 2}) == (
+    assert _normalize_epochs([(1_000_000_000, 1_000_000_005)], {0, 1, 2}) == (
         [(0, 3), (1_000_000_000, 1_000_000_005)],
         set(),
     )
     # ... and a late replay that FILLS the gap merges the ranges (r5
     # review #3: below-base explicit entries must drain, or one late
     # segment disables tombstone GC forever)
-    assert rollup_epochs([(0, 3), (5, 9)], {3, 4}) == ([(0, 9)], set())
-    assert rollup_epochs([(2, 2)], set()) == ([], set())
+    assert _normalize_epochs([(0, 3), (5, 9)], {3, 4}) == ([(0, 9)], set())
+    assert _normalize_epochs([(2, 2)], set()) == ([], set())
 
 
 def test_iceberg_end_to_end_when_runtime_present(spark, tmp_path):
@@ -513,11 +514,12 @@ def test_epoch_set_ranges_compact_and_merge():
     permanently disabling tombstone GC."""
     from etl_gmaps_spark.tableio.snapshot_table import (
         OUT_OF_BAND_EPOCH_BASE,
+        EpochSet,
         _epoch_set,
         _store_epochs,
     )
 
-    props: dict = {}
+    props: dict = {"epoch_ranges": [], "epochs": []}
     es = _epoch_set(props)
     es.explicit.update([5000, 5001])
     _store_epochs(props, es)
@@ -550,7 +552,7 @@ def test_epoch_set_ranges_compact_and_merge():
     # segment 11..4999 is genuinely un-applied, so GC must refuse; two
     # in-band ranges gap it too
     assert not _epoch_set(props).contiguous_in_band()
-    assert not _epoch_set({"epoch_ranges": [[0, 2], [5, 9]]}).contiguous_in_band()
+    assert not EpochSet([(0, 2), (5, 9)]).contiguous_in_band()
     # a late below-range segment MERGES once it fills the gap (r5
     # review #3: explicit entries must drain, or one late segment
     # turns tombstone GC off forever) — and in-band contiguity is
@@ -560,13 +562,13 @@ def test_epoch_set_ranges_compact_and_merge():
     _store_epochs(props, es5)
     assert props["epoch_ranges"][0] == [10, 5004] and props["epochs"] == []
     assert _epoch_set(props).contiguous_in_band()
-    # tables persisted under either legacy layout read back unchanged
-    legacy = {"epochs_watermark": 4, "epochs": [7]}
-    es6 = _epoch_set(legacy)
-    assert 0 in es6 and 3 in es6 and 7 in es6 and 5 not in es6
-    anchored = {"epochs_base": 100, "epochs_watermark": 104, "epochs": []}
-    es7 = _epoch_set(anchored)
-    assert 100 in es7 and 103 in es7 and 99 not in es7 and 104 not in es7
+    # ADVICE r5 (high): a range ENDING at above+1 still bounds a gap
+    # above the horizon epoch — epoch 11 is un-applied, so GC and the
+    # Iceberg horizon advance must refuse
+    assert not EpochSet([(0, 11), (12, 14)]).contiguous_in_band(above=10)
+    # ... while a gap lying wholly at or below `above` is vacuous
+    assert EpochSet([(0, 5), (8, 20)]).contiguous_in_band(above=7)
+    assert not EpochSet([(0, 5), (8, 20)]).contiguous_in_band(above=6)
 
 
 def test_gc_fires_on_one_based_epoch_stream(spark, tmp_path):
@@ -588,9 +590,7 @@ def test_gc_fires_on_one_based_epoch_stream(spark, tmp_path):
     rep.run(log)
     assert_table_equal(table.read(), expected)
     es = table.applied_epochs()
-    assert es.base == 100 and es.watermark == 110 and not es.explicit, (
-        es.base, es.watermark, es.explicit,
-    )
+    assert es.ranges == [(100, 110)] and not es.explicit, (es.ranges, es.explicit)
     assert [c for c in table.commit_log() if "gc_tombstones_before" in c], (
         "non-zero-based epoch numbering disabled the GC cadence"
     )

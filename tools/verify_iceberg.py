@@ -161,7 +161,7 @@ def main() -> int:
     # pair wherever its numbering starts, keeping O(fragmentation +
     # recent window) properties (the KEEP_RECENT_EPOCHS attribution
     # tail), not one per epoch forever
-    ranges, _, _ = it._epoch_ledger()
+    ranges, _ = it._epoch_ledger()
     checks.append(("rollup compacts 1-based run to one range", ranges == [(1, 4)]))
     it.KEEP_RECENT_EPOCHS = 0  # force full rollup so the unset path runs
     it.merge(
@@ -171,7 +171,7 @@ def main() -> int:
         ),
         epoch=0,  # BELOW the range: a late replay of an older segment
     )
-    ranges, sparse, _ = it._epoch_ledger()
+    ranges, sparse = it._epoch_ledger()
     # the late below-range epoch applies AND, being adjacent, MERGES
     # into the range (r5 review: a drained gap must compact, not pin
     # one explicit property per late epoch forever)
@@ -221,18 +221,6 @@ def main() -> int:
             "empty epoch list merges un-ledgered",
             it.read().filter("doc_id='doc-0006'").collect()[0]["n_tok"] == 66,
         )
-    )
-
-    # (c) checkpoint_df accepts a Spark DataFrame (the declared surface;
-    # lineage is n_buckets rows, so the collect is bounded)
-    ck = spark.createDataFrame(
-        [(0, 12345, 10, 0, 11)],
-        "partition int, last_lsn long, rows_applied long, bytes long, epoch long",
-    )
-    it.merge(batch_e, epoch=None, checkpoint_df=ck)
-    rows_ck = {r["partition"]: r for r in (it.checkpoint_rows() or [])}
-    checks.append(
-        ("DataFrame checkpoint stamps lineage", rows_ck.get(0, {}).get("last_lsn") == 12345)
     )
 
     # --- SnapshotTable parity on the identical batches ----------------
