@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from etl_gmaps_spark.tableio.snapshot_table import SnapshotTable, bucket_expr
+from etl_gmaps_spark.tableio.snapshot_table import OUT_OF_BAND_EPOCH_BASE, EpochSet
 
 ENVELOPE_COLS = ("lsn", "epoch", "ts")
 
@@ -64,6 +65,8 @@ class ReplayMetrics:
     # by the table's own contract (state is complete through the
     # horizon); counted, never silently applied.
     events_stale_dropped: int = 0
+    # keys whose winning (max-lsn) event in their commit was a delete
+    deletes: int = 0
     elapsed_sec: float = 0.0
     per_epoch: list[dict] = field(default_factory=list)
     # REPLAY_PROFILE=1 only: wall-seconds summed over all commits, split
@@ -77,6 +80,20 @@ class ReplayMetrics:
     @property
     def events_per_sec(self) -> float:
         return self.events_processed / self.elapsed_sec if self.elapsed_sec else 0.0
+
+    def add(self, info: dict, n_epochs: int = 1) -> None:
+        """Fold one ``Replayer.apply_batch`` result into the totals —
+        the one accounting both drivers use."""
+        self.per_epoch.append(info)
+        for k, val in (info.get("prof") or {}).items():
+            self.prof[k] = self.prof.get(k, 0.0) + val
+        if info["skipped"]:
+            return
+        self.epochs_applied += n_epochs
+        self.events_processed += info["events"]
+        self.rows_upserted += info["rows"]
+        self.events_stale_dropped += info["stale_dropped"]
+        self.deletes += info["deletes"]
 
 
 class Replayer:
@@ -142,8 +159,11 @@ class Replayer:
         # writer while it replays — GC and delete-stamps both run here).
         # A stale-low cached value only under-drops, which is safe; the
         # per-batch metadata round-trip it replaces is pure hot-loop
-        # overhead (SHOW TBLPROPERTIES on Iceberg).
+        # overhead (SHOW TBLPROPERTIES on Iceberg). gc_horizon_epoch is
+        # cached the same way, read lazily by the first safety-gate
+        # check (_collect_safe) and re-read after a GC commit stamps it.
         self._horizon: int | None = None
+        self._horizon_epoch: int | None = None
         self._ckpt: dict[int, dict] | None = None  # partition -> lineage row
 
     def _merged_checkpoint_rows(self, stats: list[dict]) -> list[dict]:
@@ -178,16 +198,15 @@ class Replayer:
         return [dict(r) for r in self._ckpt.values()]
 
     # ------------------------------------------------------------ batch
-    def apply_batch(
-        self, batch: DataFrame, epoch: int | list[int], live_metrics: bool = True
-    ) -> dict:
-        """LWW-reduce one epoch slice (or group of epochs committed as
-        one snapshot) and commit it atomically.
-
-        ``live_metrics=False`` skips the observe() instrumentation —
-        required inside foreachBatch, where Observation.get would block
-        (the streaming engine publishes its own per-batch progress
-        instead)."""
+    def apply_batch(self, batch: DataFrame, epoch: int | list[int]) -> dict:
+        """The one commit step of both drivers (``run`` and
+        ``stream_replay.run_availablenow``): LWW-reduce one epoch slice
+        (or group of epochs committed as one snapshot), commit it
+        atomically, then run the post-commit policy — MoR auto-compact,
+        delete accounting, and the horizon advance (sinks whose deletes
+        are immediate) or the tombstone-GC tick, both behind
+        _collect_safe. Counts ``events``, ``winners`` (keys written),
+        ``deletes`` (keys whose winner is a delete), ``stale_dropped``."""
         epochs = [epoch] if isinstance(epoch, int) else list(epoch)
         applied = self.table.applied_epochs()
         if all(e in applied for e in epochs):
@@ -227,7 +246,8 @@ class Replayer:
         # own winner-agg rebuild were two more full scans per epoch,
         # pure fixed cost that throttled N→4N scaling):
         #   * per-KEY hash aggregation (primitive counters only — count,
-        #     max lsn, byte sum, max ts) collapses the stream map-side;
+        #     max lsn, byte sum, max ts, winner-is-delete) collapses the
+        #     stream map-side;
         #     a hot key sends one counter row per map task, no payload.
         #   * the per-BUCKET lineage stats (checkpoint granularity) are
         #     a rollup of the per-key rows — bucket = f(key).
@@ -260,6 +280,9 @@ class Replayer:
             F.max(self.lsn_col).alias("last_lsn"),
             F.sum(ev_bytes).alias("_bytes"),
             F.max("ts").alias("updated_at"),
+            # 1 when the key's winning (max-lsn) event is a delete: the
+            # delete count rides the same partial/final aggregation
+            F.max_by((F.col(self.op_col) == "D").cast("int"), self.lsn_col).alias("_del"),
         ]
         if self.salt_buckets and self.salt_buckets > 1:
             # explicit two-phase reduce for pathological hot keys: the
@@ -275,6 +298,7 @@ class Replayer:
                     F.max("last_lsn").alias("last_lsn"),
                     F.sum("_bytes").alias("_bytes"),
                     F.max("updated_at").alias("updated_at"),
+                    F.max_by("_del", "last_lsn").alias("_del"),
                 )
             )
         else:
@@ -306,20 +330,6 @@ class Replayer:
             self.key_col,
             *[c for c in [self.op_col, self.lsn_col] + payload_cols if c != self.key_col],
         )
-        # A3 live metrics: observe() rides the merge action itself — the
-        # winner/delete counts are collected by accumulator during the
-        # write, zero extra jobs (the reference's live progress counters,
-        # tlmt + exiter.IncrPlacesCompleted analog).
-        obs = None
-        if live_metrics:
-            from pyspark.sql import Observation
-
-            obs = Observation()
-            src = src.observe(
-                obs,
-                F.count(F.lit(1)).alias("winners"),
-                F.sum((F.col(self.op_col) == "D").cast("long")).alias("deletes"),
-            )
         import os as _os
 
         _prof = _os.environ.get("REPLAY_PROFILE") == "1"
@@ -333,6 +343,11 @@ class Replayer:
                 F.max("last_lsn").alias("last_lsn"),
                 F.sum("_bytes").alias("_raw_bytes"),
                 F.max("updated_at").alias("updated_at"),
+                # A3 live metrics (the reference's live progress
+                # counters, tlmt + exiter.IncrPlacesCompleted analog):
+                # winner keys and winning deletes, from the same collect
+                F.count(F.lit(1)).alias("_winners"),
+                F.sum("_del").alias("_deletes"),
             )
             .collect()
         ]
@@ -406,6 +421,9 @@ class Replayer:
             for r in stats_rows
         ]
         events = sum(r["rows_applied"] for r in stats)
+        winners = sum(int(r["_winners"]) for r in stats_rows)
+        deletes = sum(int(r["_deletes"] or 0) for r in stats_rows)
+        last_lsn = max((s["last_lsn"] for s in stats), default=None)
         ckpt = self._merged_checkpoint_rows(stats)
 
         _t = monotonic()
@@ -448,27 +466,63 @@ class Replayer:
                     (res.prof or {}).values()
                 )
             )
-        # available as soon as the merge action finished (same job);
-        # same zero-rows metrics quirk as above — an all-stale batch
-        # (empty stats) merges an empty winner set, whose observation
-        # is unretrievable
-        live = obs.get if obs is not None and stats_rows else {}
+        # post-commit policy
+        if self._gc_deletes is not None:
+            self._gc_deletes += deletes
+        if self.table.deletes_are_immediate:
+            # the sink deletes rows outright (Iceberg): no tombstone is
+            # left to stop a late older segment re-inserting the key, so
+            # advance the persisted horizon to this batch's high-water
+            # lsn as soon as a delete commits — such events are dropped
+            # as stale instead. While the gate refuses, the gap's
+            # deletes stay unguarded until it closes: the honest trade
+            # for a tombstone-less sink (an advanced horizon would
+            # silently discard the gap's events when they drain).
+            if deletes and self._collect_safe(applied, epochs):
+                self.table.advance_gc_horizon(last_lsn, epoch=max(epochs))
+                self._horizon = max(self._horizon, last_lsn)
+                self._horizon_epoch = max(self._horizon_epoch, max(epochs))
+        elif (
+            # GC cadence rides the table's PERSISTENT snapshot version,
+            # not a per-run commit counter: a driver that polls with
+            # max_epochs=K < gc_every (or builds a fresh Replayer per
+            # poll, jobs/replay_job.py) would reset a local counter
+            # every invocation and never GC
+            self.gc_tombstones
+            and int(res.snapshot_id or 0) % self.gc_every == 0
+            and self._collect_safe(applied, epochs)
+        ):
+            self._maybe_gc_tombstones()
         return {
             "epoch": epochs[-1],
             "skipped": False,
             "events": events,
             "rows": events,
             "stale_dropped": stale_dropped,
-            # batch high-water lsn: the horizon stamp for sinks whose
-            # deletes are immediate (no tombstone survives to guard)
-            "last_lsn": max((s["last_lsn"] for s in stats), default=None),
-            "winners": int(live.get("winners") or 0),
-            "deletes": int(live.get("deletes") or 0),
+            "last_lsn": last_lsn,
+            "winners": winners,
+            "deletes": deletes,
             "snapshot": res.snapshot_id,
             "buckets_rewritten": res.buckets_rewritten,
             "buckets_compacted": compacted,
             "prof": prof,
         }
+
+    def _collect_safe(self, applied: EpochSet, epochs: list[int]) -> bool:
+        """Safety gate of the horizon advance and the GC tick. Epochs
+        are lsn-monotone slices applied ascending, so while the IN-BAND
+        post-commit ledger is contiguous above gc_horizon_epoch (gaps at
+        or below it hold only horizon-dropped events) no un-applied
+        event has a lower lsn than an applied one. Out-of-band keys
+        (the streaming namespace) label micro-batches, not lsn ranges:
+        such commits never move the horizon or GC, and 10^9+ is never
+        stamped as the horizon epoch. No metadata round-trip."""
+        if any(e >= OUT_OF_BAND_EPOCH_BASE for e in epochs):
+            return False
+        if self._horizon_epoch is None:
+            self._horizon_epoch = self.table.gc_horizon_epoch()
+        ledger = EpochSet(applied.ranges, applied.explicit | set(epochs))
+        return ledger.contiguous_in_band(above=self._horizon_epoch)
 
     # -------------------------------------------------------------- run
     def run(
@@ -478,7 +532,8 @@ class Replayer:
         batch_epochs: int = 1,
         max_epochs: int | None = None,
     ) -> ReplayMetrics:
-        """Replay the whole log; resumable and idempotent.
+        """Replay the whole log; resumable and idempotent: pending
+        epochs go ``batch_epochs`` at a time through ``apply_batch``.
 
         ``fail_after_epochs`` injects a crash after N successful commits
         (test hook for the crash-resume scenario).
@@ -506,54 +561,7 @@ class Replayer:
         for group_start in range(0, len(pending), batch_epochs):
             group = [int(e) for e in pending[group_start : group_start + batch_epochs]]
             batch = log.filter(F.col(self.epoch_col).isin(group))
-            info = self.apply_batch(batch, epoch=group)
-            if not info["skipped"]:
-                m.epochs_applied += len(group)
-                m.events_processed += info["events"]
-                m.rows_upserted += info["rows"]
-                m.events_stale_dropped += int(info.get("stale_dropped") or 0)
-                if self._gc_deletes is not None:
-                    self._gc_deletes += int(info.get("deletes") or 0)
-                # sinks whose deletes remove the row outright (Iceberg)
-                # keep no tombstone to guard against a late replay of
-                # an older segment re-inserting the key: advance the
-                # persisted horizon to this batch's high-water lsn the
-                # moment a delete commits, so such events are dropped
-                # as stale instead. ONLY while the in-band ledger is
-                # contiguous above the current horizon epoch: with a
-                # known un-applied gap below this batch, an advanced
-                # horizon would silently discard the gap's events when
-                # they finally drain (the review-caught loss case) —
-                # the gap's deletes stay unguarded until it closes,
-                # which is the honest trade for a tombstone-less sink.
-                if (
-                    getattr(self.table, "deletes_are_immediate", False)
-                    and int(info.get("deletes") or 0) > 0
-                    and info.get("last_lsn") is not None
-                    and self.table.applied_epochs().contiguous_in_band(
-                        above=self.table.gc_horizon_epoch()
-                    )
-                ):
-                    self.table.advance_gc_horizon(
-                        int(info["last_lsn"]), epoch=max(group)
-                    )
-                    self._horizon = max(
-                        self._horizon or 0, int(info["last_lsn"])
-                    )
-                # GC cadence rides the table's PERSISTENT snapshot
-                # version, not a run()-local commit counter: a driver
-                # that polls with max_epochs=K < gc_every (or builds a
-                # fresh Replayer per poll, jobs/replay_job.py) would
-                # reset a local counter every invocation and never GC
-                if (
-                    self.gc_tombstones
-                    and int(info["snapshot"] or 0) % self.gc_every == 0
-                ):
-                    self._maybe_gc_tombstones()
-            m.per_epoch.append(info)
-            if info.get("prof"):
-                for k, val in info["prof"].items():
-                    m.prof[k] = m.prof.get(k, 0.0) + val
+            m.add(self.apply_batch(batch, epoch=group), n_epochs=len(group))
             if fail_after_epochs is not None and m.epochs_applied >= fail_after_epochs:
                 m.elapsed_sec = monotonic() - t0
                 raise InjectedCrash(f"injected crash after {m.epochs_applied} epochs")
@@ -561,21 +569,10 @@ class Replayer:
         return m
 
     def _maybe_gc_tombstones(self) -> CommitResult | None:
-        """Run the tombstone-GC maintenance pass if a safe low-water
-        mark exists. The mark: no event with a lower lsn can ever reach
-        row-level apply again. Epoch slices are lsn-monotone (the CDC
-        binlog contract: an epoch is an lsn range) and this loop applies
-        pending epochs ascending, so while the ledger is CONTIGUOUS
-        (no out-of-order explicit epochs) every not-yet-applied event's
-        lsn exceeds every applied one — any applied lsn qualifies; the
-        min per-bucket checkpointed last_lsn is the conservative pick.
-        With a gapped ledger there is no safe mark, so GC is skipped
-        rather than guessed."""
-        if not hasattr(self.table, "maintain"):
-            # IcebergTable: tombstones don't exist there (DELETE removes
-            # the row) and compaction is Iceberg's own
-            # rewrite_data_files procedure on its own schedule
-            return None
+        """Run the tombstone-GC maintenance pass at the replay low-water
+        mark, below which no event can reach row-level apply again.
+        Behind _collect_safe any applied lsn qualifies; the min
+        per-bucket checkpointed last_lsn is the conservative pick."""
         if self._gc_deletes == 0 and self._gc_residue is False:
             # no deletes since the last check AND that check saw no
             # above-the-mark residue: no bucket's eligible tombstone
@@ -583,19 +580,6 @@ class Replayer:
             # (Either None = unknown prior state: fall through. Residue
             # matters because an advancing low-water mark makes
             # above-mark tombstones eligible without any new delete.)
-            return None
-        # gapped IN-BAND ledger (an un-applied older segment may exist
-        # between applied runs) = no safe low-water mark; see the
-        # docstring. A single contiguous run anchored anywhere
-        # (epoch-1-based stream, mid-binlog resume) passes — the safety
-        # argument needs contiguity, not zero-based numbering. Ignored
-        # as vacuous: out-of-band ledger keys (the streaming namespace
-        # at 10^9), and fragmentation at/below gc_horizon_epoch (those
-        # epochs' events are horizon-dropped and can never apply — a
-        # consumed fully-stale segment must not turn GC off forever).
-        if not self.table.applied_epochs().contiguous_in_band(
-            above=self.table.gc_horizon_epoch()
-        ):
             return None
         ckpt = self._ckpt or {}
         lwm = min((int(r["last_lsn"]) for r in ckpt.values()), default=None)
@@ -625,9 +609,10 @@ class Replayer:
         # eligible tombstones in delta-triggered buckets ride the
         # rewrite for free — same pass, same low-water mark
         res = self.table.compact(buckets=todo, tombstones_before=lwm)
-        # the compact commit advanced the persisted horizon to lwm;
-        # keep the in-process cache in step
+        # the compact commit advanced the persisted horizon to lwm (and
+        # may have stamped its epoch); keep the in-process caches in step
         self._horizon = max(self._horizon or 0, lwm)
+        self._horizon_epoch = None
         return res
 
     def is_done(self, log: DataFrame) -> bool:

@@ -12,29 +12,33 @@ from the table's epoch ledger, NOT from Spark's checkpoint alone: a
 replayed micro-batch (e.g. after checkpoint loss) is skipped by ledger
 lookup, mirroring ON CONFLICT DO NOTHING (postgres/provider.go:108-111).
 
-Micro-batches may slice the log arbitrarily (one epoch can span many
-batches and vice versa), so batch-level ledger keys cannot be exactly-
-once by themselves. Correctness instead rests on the table's ROW-LEVEL
-LWW guard (_lsn + tombstones, tableio/snapshot_table.py): re-applying
-any stale, duplicate, or resliced set of events is a per-row no-op.
-The ledger (keyed on STREAM_EPOCH_BASE + batch_id) remains as a cheap
-skip for exact re-delivery of committed micro-batches with an intact
-streaming checkpoint.
+Each micro-batch goes through ``Replayer.apply_batch``, the batch
+driver's own commit step, and is summed into the same ReplayMetrics.
+Micro-batches may slice the log arbitrarily, so batch-level ledger keys
+cannot be exactly-once by themselves: correctness rests on the table's
+ROW-LEVEL LWW guard (_lsn + tombstones, tableio/snapshot_table.py),
+which makes re-applying stale, duplicate or resliced events a per-row
+no-op. The ledger (keyed on the out-of-band STREAM_EPOCH_BASE +
+batch_id) is a cheap skip for exact re-delivery.
+
+Out-of-band commits count their deletes but never advance the GC
+horizon or run tombstone GC (apply_batch's in-band-only gate), because
+the file source does not deliver in lsn order: 2000 events in 4 epochs
+written ``partitionBy("epoch")`` streamed at maxFilesPerTrigger=8 as
+batch 0 = lsn [1, 1495] (epochs 0-2), batch 1 = lsn [501, 2000]
+(epochs 1-3). A mark taken after batch 0 would drop batch 1's real
+events as stale.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from etl_gmaps_spark.streaming.replay import Replayer
-from etl_gmaps_spark.tableio.snapshot_table import SnapshotTable
+from etl_gmaps_spark.streaming.replay import Replayer, ReplayMetrics
+from etl_gmaps_spark.tableio.snapshot_table import OUT_OF_BAND_EPOCH_BASE, SnapshotTable
 
 # Streaming ledger keys live in the reserved out-of-band namespace far
-# above log epochs; EpochSet keeps them as their own contiguous range
-# and the tombstone-GC contiguity argument ignores them (the gap
-# between the namespaces is vacuous by construction).
-from etl_gmaps_spark.tableio.snapshot_table import OUT_OF_BAND_EPOCH_BASE
-
+# above log epochs; EpochSet keeps them as their own contiguous range.
 STREAM_EPOCH_BASE = OUT_OF_BAND_EPOCH_BASE
 
 
@@ -56,17 +60,11 @@ def run_availablenow(
     the worst delta chains (see SnapshotTable.maintain).
     """
     replayer = Replayer(table, auto_compact=auto_compact)
-    applied: list[dict] = []
+    m = ReplayMetrics()
 
     def apply_micro_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        # live_metrics=False: Observation.get would block inside
-        # foreachBatch; streaming progress comes from the query itself
-        info = replayer.apply_batch(
-            batch_df, epoch=STREAM_EPOCH_BASE + batch_id, live_metrics=False
-        )
-        applied.append(info)
+        if not batch_df.isEmpty():
+            m.add(replayer.apply_batch(batch_df, epoch=STREAM_EPOCH_BASE + batch_id))
 
     reader = spark.readStream
     if schema is not None:
@@ -80,7 +78,9 @@ def run_availablenow(
     )
     q.awaitTermination()
     return {
-        "micro_batches": len(applied),
-        "events": sum(i.get("events", 0) for i in applied),
-        "skipped": sum(1 for i in applied if i.get("skipped")),
+        "micro_batches": len(m.per_epoch),
+        "events": m.events_processed,
+        "skipped": len(m.per_epoch) - m.epochs_applied,
+        "deletes": m.deletes,
+        "stale_dropped": m.events_stale_dropped,
     }

@@ -204,10 +204,11 @@ class IcebergTable:
     KEEP_RECENT_EPOCHS = 64
 
     # Iceberg MERGE deletes remove the row outright — no tombstone
-    # survives to reject a later stale re-insert. The Replayer reads
-    # this to advance the gc horizon after every delete-bearing commit
-    # (SnapshotTable keeps tombstones, so its horizon only advances
-    # when GC physically collects them).
+    # survives to reject a later stale re-insert. Replayer.apply_batch
+    # branches on this: True advances the gc horizon after every
+    # delete-bearing commit, False (SnapshotTable keeps tombstones, so
+    # its horizon only advances when GC physically collects them) runs
+    # the tombstone-GC tick instead.
     deletes_are_immediate = True
 
     def __init__(self, spark: SparkSession, identifier: str):

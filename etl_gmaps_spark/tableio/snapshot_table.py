@@ -176,10 +176,11 @@ class CommitResult:
 # Ledger keys at/above this value are OUT-OF-BAND: they are not log
 # epochs but parallel ledger namespaces (the Structured Streaming path
 # keys its micro-batches at OUT_OF_BAND_EPOCH_BASE + batch_id, see
-# streaming/stream_replay.py). The tombstone-GC contiguity argument
-# (Replayer._maybe_gc_tombstones) only quantifies over IN-BAND epochs:
-# a gap between the batch range and the streaming range is vacuous by
-# construction, not evidence of an un-applied older segment.
+# streaming/stream_replay.py). The GC/horizon contiguity argument
+# (Replayer._collect_safe) only quantifies over IN-BAND epochs: a gap
+# between the batch range and the streaming range is vacuous by
+# construction, not evidence of an un-applied older segment, and an
+# out-of-band commit never moves the horizon or runs GC.
 OUT_OF_BAND_EPOCH_BASE = 1_000_000_000
 
 
@@ -327,6 +328,11 @@ def bucket_expr(key_col: str, n_buckets: int):
 
 
 class SnapshotTable:
+    # deletes leave a tombstone guard row (collected later by GC), so
+    # Replayer.apply_batch runs the tombstone-GC tick, not the
+    # delete-time horizon advance (IcebergTable parity)
+    deletes_are_immediate = False
+
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
@@ -854,19 +860,25 @@ class SnapshotTable:
             )
             # gc_horizon_epoch: the highest epoch provably ENTIRELY
             # below the horizon. When the in-band ledger is one
-            # contiguous range [b, w), every checkpoint last_lsn (and
-            # so any lwm-derived tombstones_before) is >= the first lsn
-            # of epoch b, and epochs are lsn-monotone slices — so all
-            # epochs < b sit wholly below the horizon. Fragmentation at
-            # or below this epoch is vacuous for future GC contiguity
-            # checks (a consumed fully-stale segment must not turn GC
-            # off forever). A gapped ledger (manual compact call) just
-            # leaves the stricter old value.
+            # contiguous range [b, w), every checkpoint last_lsn is >=
+            # the first lsn of epoch b, and epochs are lsn-monotone
+            # slices — so once the horizon reaches the checkpoint
+            # low-water mark (the Replayer's GC mark does), all epochs
+            # < b sit wholly below it. Fragmentation at or below this
+            # epoch is vacuous for future GC contiguity checks (a
+            # consumed fully-stale segment must not turn GC off
+            # forever). A gapped ledger or a horizon below the mark (a
+            # manual compact call) leaves the stricter old value.
             es_now = _epoch_set(props)
             in_band = [r for r in es_now.ranges if r[0] < OUT_OF_BAND_EPOCH_BASE]
-            if es_now.contiguous_in_band(
-                above=int(props.get("gc_horizon_epoch", -1))
-            ) and in_band:
+            ckpt = self.checkpoint_rows(snap["version"]) or []
+            ckpt_lwm = min((int(r["last_lsn"]) for r in ckpt), default=None)
+            if (
+                in_band
+                and ckpt_lwm is not None
+                and props["gc_horizon"] >= ckpt_lwm
+                and es_now.contiguous_in_band(above=int(props.get("gc_horizon_epoch", -1)))
+            ):
                 props["gc_horizon_epoch"] = max(
                     int(props.get("gc_horizon_epoch", -1)), in_band[-1][0] - 1
                 )
@@ -960,7 +972,7 @@ class SnapshotTable:
         apply again (epochs are lsn-monotone slices and the epoch
         ledger rejects re-delivered applied epochs wholesale, so the
         min per-bucket checkpointed last_lsn qualifies while the ledger
-        is contiguous — see Replayer.run)."""
+        is contiguous — see Replayer._collect_safe)."""
         snap = self.snapshot()
         todo: set[int] = set()
         for b, e in self._resolve(snap).items():
@@ -990,11 +1002,7 @@ class SnapshotTable:
         return sorted(todo)
 
     def maintain(
-        self,
-        max_chain: int | None = 8,
-        max_delta_ratio: float | None = 0.5,
-        tombstone_ratio: float | None = None,
-        tombstone_before: int | None = None,
+        self, max_chain: int | None = 8, max_delta_ratio: float | None = 0.5
     ) -> CommitResult | None:
         """Threshold-triggered incremental compaction (VERDICT r3 #4):
         compact ONLY the buckets whose delta chains crossed the policy —
@@ -1004,24 +1012,11 @@ class SnapshotTable:
         remembers to call compact() by hand. Called by Replayer after
         each commit on MoR tables (auto_compact=True, the default);
         standalone jobs can call it on their own cadence. Returns None
-        when no bucket crossed the threshold.
-
-        With ``tombstone_ratio``+``tombstone_before`` (VERDICT r4 #3)
-        the plan also triggers on per-bucket GC-eligible tombstone mass
-        and the rewrite drops those guard rows — delete-heavy streams
-        stay bounded instead of accumulating dead rows until an
-        operator remembers compact_tombstones()."""
-        todo = self.maintenance_plan(
-            max_chain, max_delta_ratio, tombstone_ratio, tombstone_before
-        )
+        when no bucket crossed the threshold."""
+        todo = self.maintenance_plan(max_chain, max_delta_ratio)
         if not todo:
             return None
-        gc_before = (
-            tombstone_before
-            if tombstone_ratio is not None and tombstone_before is not None
-            else None
-        )
-        return self.compact(buckets=todo, tombstones_before=gc_before)
+        return self.compact(buckets=todo)
 
     def expire_snapshots(
         self, keep_last: int = 2, orphan_min_age_sec: float = 600.0
@@ -1135,22 +1130,6 @@ class SnapshotTable:
             if f.startswith("ckpt-") and p not in live_ckpts and not _orphan_guarded(p):
                 shutil.rmtree(p, ignore_errors=True) if os.path.isdir(p) else os.remove(p)
         return {"removed_files": removed_files, "removed_snapshots": removed_snaps, "kept": sorted(keep)}
-
-    def compact_tombstones(self, before_lsn: int) -> CommitResult:
-        """Manual whole-table tombstone GC: physically drop deleted rows
-        whose _lsn is below ``before_lsn`` (the replay low-water mark) —
-        no event at a lower lsn can ever arrive again, so the guard rows
-        are dead weight. Rewrites every bucket. The automatic, per-bucket
-        form is maintain(tombstone_ratio=..., tombstone_before=...),
-        which the Replayer drives on a gc_every cadence; keep this one
-        for one-shot operator runs."""
-        snap = self.snapshot()
-        full = self._reconciled(snap)
-        kept = full.filter(
-            ~F.coalesce(F.col(DELETED_COL), F.lit(False))
-            | (F.col(LSN_COL) >= F.lit(before_lsn))
-        )
-        return self.overwrite(kept)
 
     def evolve_schema(self, new_fields: list[T.StructField]) -> T.StructType:
         """Additive-only schema evolution (mirrors reference migrations

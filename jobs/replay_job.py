@@ -62,6 +62,11 @@ def main() -> None:
             "--merge-mode applies to SnapshotTable only; for Iceberg set the "
             "table property write.merge.mode=merge-on-read instead"
         )
+    if args.stream and (args.salt or args.batch_epochs != 1 or args.max_epochs is not None):
+        # the streaming driver slices its own micro-batches
+        # (maxFilesPerTrigger) and reduces them unsalted: these flags
+        # would be silently ignored
+        ap.error("--salt, --batch-epochs and --max-epochs apply to batch mode only, not --stream")
 
     from etl_gmaps_spark.schemas import TARGET_SCHEMA
     from etl_gmaps_spark.session import get_spark
@@ -139,6 +144,8 @@ def main() -> None:
                     "events_per_sec": round(m.events_per_sec, 1),
                     "epochs_applied": m.epochs_applied,
                     "epochs_skipped": m.epochs_skipped,
+                    "deletes": m.deletes,
+                    "stale_dropped": m.events_stale_dropped,
                     "final_rows": table.read().count(),
                     # SnapshotTable reports its version; IcebergTable's
                     # descriptor has no version key (the catalog owns it)

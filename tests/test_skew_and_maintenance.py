@@ -6,6 +6,7 @@ from __future__ import annotations
 import os
 
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from etl_gmaps_spark.datagen import gen_base, gen_changelog
@@ -13,6 +14,7 @@ from etl_gmaps_spark.oracle import replay_oracle
 from etl_gmaps_spark.schemas import TARGET_SCHEMA
 from etl_gmaps_spark.streaming.replay import Replayer
 from etl_gmaps_spark.tableio import SnapshotTable
+from etl_gmaps_spark.tableio.snapshot_table import OUT_OF_BAND_EPOCH_BASE
 from tests.conftest import assert_table_equal
 
 
@@ -140,10 +142,20 @@ def test_expiry_spares_inflight_commit(spark, tmp_path, monkeypatch):
 
 
 def test_tombstone_compaction(spark, tmp_path):
+    """Whole-table tombstone GC through compact(tombstones_before=...):
+    dead guard rows go, live state stays, and the horizon is persisted.
+    The horizon epoch is stamped only once the horizon reaches the
+    checkpoint low-water mark. Epochs start at 100 and the table is MoR
+    with auto-compaction off, so a below-mark compact still commits
+    (it folds the deltas) and a wrong stamp would read 99, not -1."""
     base = gen_base(spark, n_docs=100, seed=73)
-    log = gen_changelog(spark, n_docs=100, n_events=1000, seed=73, epoch_size=500)
-    table = SnapshotTable.create(spark, str(tmp_path / "t"), TARGET_SCHEMA, base_df=base)
-    Replayer(table).run(log)
+    log = gen_changelog(
+        spark, n_docs=100, n_events=1000, seed=73, epoch_size=500
+    ).withColumn("epoch", F.col("epoch") + F.lit(100))
+    table = SnapshotTable.create(
+        spark, str(tmp_path / "t"), TARGET_SCHEMA, base_df=base, merge_mode="mor"
+    )
+    Replayer(table, auto_compact=False).run(log)
     expected = replay_oracle(base.toPandas(), log.toPandas())
     live_before = table.read().count()
     full = spark.read.option("mergeSchema", "true").parquet(
@@ -151,7 +163,11 @@ def test_tombstone_compaction(spark, tmp_path):
     )
     n_tombstones = full.filter(F.col("_deleted")).count()
     assert n_tombstones > 0  # deletes happened
-    table.compact_tombstones(before_lsn=10_000)
+    table.compact(tombstones_before=1)  # below the checkpoint low-water mark
+    assert table.gc_horizon() == 1 and table.gc_horizon_epoch() == -1
+    table.compact(tombstones_before=10_000)
+    assert table.gc_horizon() == 10_000
+    assert table.gc_horizon_epoch() == 99
     full2 = spark.read.option("mergeSchema", "true").parquet(
         *[f for fl in table.files_map().values() for f in fl]
     )
@@ -571,17 +587,21 @@ def test_epoch_set_ranges_compact_and_merge():
     assert not EpochSet([(0, 5), (8, 20)]).contiguous_in_band(above=6)
 
 
-def test_gc_fires_on_one_based_epoch_stream(spark, tmp_path):
+@pytest.mark.parametrize("offset", [100, OUT_OF_BAND_EPOCH_BASE], ids=["in_band", "out_of_band"])
+def test_gc_fires_on_one_based_epoch_stream(spark, tmp_path, offset):
     """Regression (r5 review #1): a delete-heavy changelog whose epochs
     do not start at zero must still (a) compact its ledger via the base
     anchor and (b) run tombstone GC — the gap check reads explicit
     entries, which the old zero-anchored watermark accumulated forever
-    on such streams, silently disabling GC."""
+    on such streams, silently disabling GC. The same log keyed in the
+    out-of-band namespace (where streaming micro-batches live, and keys
+    say nothing about lsn order) must never GC or move the horizon,
+    and still replays oracle-equal."""
     base = gen_base(spark, n_docs=400, seed=79)
     log = gen_changelog(
         spark, n_docs=400, n_events=1500, seed=79, epoch_size=150,
         pct_insert=10, pct_delete=50, hot_frac=0.0, dup_epochs=(),
-    ).withColumn("epoch", F.col("epoch") + F.lit(100))
+    ).withColumn("epoch", F.col("epoch") + F.lit(offset))
     expected = replay_oracle(base.toPandas(), log.toPandas())
     table = SnapshotTable.create(
         spark, str(tmp_path / "t"), TARGET_SCHEMA, base_df=base, merge_mode="mor"
@@ -590,10 +610,13 @@ def test_gc_fires_on_one_based_epoch_stream(spark, tmp_path):
     rep.run(log)
     assert_table_equal(table.read(), expected)
     es = table.applied_epochs()
-    assert es.ranges == [(100, 110)] and not es.explicit, (es.ranges, es.explicit)
-    assert [c for c in table.commit_log() if "gc_tombstones_before" in c], (
-        "non-zero-based epoch numbering disabled the GC cadence"
-    )
+    assert es.ranges == [(offset, offset + 10)] and not es.explicit, (es.ranges, es.explicit)
+    gc_commits = [c for c in table.commit_log() if "gc_tombstones_before" in c]
+    if offset < OUT_OF_BAND_EPOCH_BASE:
+        assert gc_commits, "non-zero-based epoch numbering disabled the GC cadence"
+    else:
+        assert not gc_commits, "an out-of-band commit ran tombstone GC"
+        assert table.gc_horizon() == 0 and table.gc_horizon_epoch() == -1
     # is_done honours the base bound: the applied range never covers
     # epochs below it, so the same events renumbered lower read PENDING
     assert rep.is_done(log)

@@ -26,6 +26,9 @@ def test_streaming_replay_matches_oracle(spark, tmp_path):
     table = SnapshotTable.create(spark, str(tmp_path / "tbl"), TARGET_SCHEMA, base_df=base)
     res = run_availablenow(spark, log_path, table, str(tmp_path / "ckpt"), schema=schema)
     assert res["events"] == 2000
+    # the shared commit step reports deletes and stale drops (no GC
+    # horizon exists on a streamed table, so nothing is dropped)
+    assert res["deletes"] > 0 and res["stale_dropped"] == 0
 
     expected = replay_oracle(base.toPandas(), log.toPandas())
     assert_table_equal(table.read(), expected)

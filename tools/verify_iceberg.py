@@ -31,6 +31,9 @@ What it proves, in order:
   4. evolution: a new source column ALTER-ADDs and backfills null
   5. commit_log: the S4 ledger surface answered from `.snapshots`
   6. parity:    final rows == SnapshotTable applying the same batches
+  7. replayer:  Replayer over IcebergTable — crash-resume, oracle
+                equality, and the gc-horizon stale-replay guard, which
+                only in-band (never streaming-namespace) commits advance
 
 Exit code 0 and a final "ICEBERG VERIFY: PASS" line on success.
 """
@@ -310,6 +313,37 @@ def main() -> int:
     # must be DROPPED as stale — counted, never applied (it could
     # resurrect a deleted key)
     checks.append(("gc horizon stamped on deletes", irt.gc_horizon() > 0))
+
+    # one commit step, one gate: a delete-bearing IN-BAND apply_batch
+    # advances the horizon to its high-water lsn; the same shape keyed
+    # out-of-band (the streaming ledger namespace) leaves the horizon and
+    # its epoch untouched
+    from etl_gmaps_spark.tableio.snapshot_table import OUT_OF_BAND_EPOCH_BASE
+
+    def delete_batch(key, lsn, epoch):
+        return spark.createDataFrame(
+            [(key, None, None, None, "D", lsn, epoch, None)],
+            "doc_id string, tokens array<int>, n_tok int, source string, "
+            "op string, lsn long, epoch long, ts timestamp",
+        )
+
+    nxt = max(irt.applied_epochs()) + 1
+    keys = [r["doc_id"] for r in irt.read().select("doc_id").limit(2).collect()]
+    Replayer(IcebergTable(spark, ident_r)).apply_batch(
+        delete_batch(keys[0], max_lsn + 10, nxt), epoch=nxt
+    )
+    checks.append(("in-band delete advances gc horizon", irt.gc_horizon() == max_lsn + 10))
+    horizon_before = (irt.gc_horizon(), irt.gc_horizon_epoch())
+    oob = OUT_OF_BAND_EPOCH_BASE + 1
+    Replayer(IcebergTable(spark, ident_r)).apply_batch(
+        delete_batch(keys[1], max_lsn + 20, oob), epoch=oob
+    )
+    checks.append(
+        (
+            "out-of-band delete leaves gc horizon",
+            (irt.gc_horizon(), irt.gc_horizon_epoch()) == horizon_before,
+        )
+    )
     stale = spark.createDataFrame(
         [("doc-stale", [1, 2], 2, "web", "U", 0, 999_999, None)],
         "doc_id string, tokens array<int>, n_tok int, source string, "
