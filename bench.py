@@ -191,16 +191,15 @@ def bench_replay(spark) -> dict:
                     "bytes_rewritten": rewritten,
                     "write_amplification": round(rewritten / max(1, log_bytes), 2),
                 }
-                if m.prof:
-                    # Amdahl decomposition (REPLAY_PROFILE=1): cluster
-                    # jobs vs driver-serial seconds; driver_other is the
-                    # un-instrumented remainder (plan/optimize, python
-                    # glue, epoch listing).
-                    prof = {k: round(v, 3) for k, v in m.prof.items()}
-                    prof["driver_other"] = round(
-                        max(0.0, elapsed - sum(m.prof.values())), 3
-                    )
-                    best["prof"] = prof
+                # Amdahl decomposition: cluster jobs vs driver-serial
+                # seconds; driver_other is the remainder outside the
+                # commit phases and the epoch listing (the loop, the
+                # Replayer constructor).
+                prof = {k: round(v, 3) for k, v in m.phases.items()}
+                prof["driver_other"] = round(
+                    max(0.0, elapsed - sum(m.phases.values())), 3
+                )
+                best["prof"] = prof
                 final_rows = table.read().count()
         best["final_rows"] = final_rows
         best["repeats"] = repeats

@@ -69,7 +69,6 @@ def run_level(n_execs: int, n_events: int) -> dict:
         BENCH_REPEAT=os.environ.get("BENCH_REPEAT", "2"),
         BENCH_SKIP_QUERIES="1",
         BENCH_SKIP_MOR="1",
-        REPLAY_PROFILE="1",
         BENCH_DIR=shm,
         SPARK_GRAFT_LOCAL_DIR=os.path.join(shm, "spark-local"),
         # one shared input: the first launch materializes the log; every
@@ -89,7 +88,7 @@ def run_level(n_execs: int, n_events: int) -> dict:
         sys.executable, os.path.join(REPO, "bench.py"),
     ]
     out = subprocess.run(cmd, env=env, capture_output=True, text=True, check=True, cwd=REPO)
-    # full detail (incl. the REPLAY_PROFILE Amdahl phases) lives in the
+    # full detail (incl. the Amdahl commit phases) lives in the
     # side file; the driver stdout line is deliberately compact (r3 #1)
     want_mode = env.get("BENCH_MERGE_MODE", "cow")
     try:
@@ -108,12 +107,12 @@ def run_level(n_execs: int, n_events: int) -> dict:
             pass
 
 
-CLUSTER_PHASES = ("stats_collect", "write_buckets")
+CLUSTER_PHASES = ("epoch_listing", "stats_collect", "write_buckets", "maintain")
 SERIAL_PHASES = ("post_write", "snapshot_commit", "batch_other", "driver_other")
 
 
 def _amdahl_md(best: dict, n: int, four_n: int) -> str:
-    """Per-phase wall-clock of each level's best run (REPLAY_PROFILE=1),
+    """Per-phase wall-clock of each level's best run,
     split cluster-parallel vs driver-serial (VERDICT r2 #7): the serial
     share s bounds N->kN efficiency at 1/(s*k + (1-s)) — if the measured
     0.8+ efficiency is real, s must be small AND roughly constant in
@@ -133,7 +132,7 @@ def _amdahl_md(best: dict, n: int, four_n: int) -> str:
     s_n = serial[n] / total[n]
     ceiling = 1 / (s_n * (four_n / n) + (1 - s_n)) if total[n] else 0.0
     return f"""
-## Amdahl decomposition of the best run per level (REPLAY_PROFILE=1)
+## Amdahl decomposition of the best run per level
 
 | phase | kind | {n} exec (s) | {four_n} exec (s) |
 |---|---|---|---|

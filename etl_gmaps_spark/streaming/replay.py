@@ -30,7 +30,7 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 from time import monotonic
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from etl_gmaps_spark.tableio.snapshot_table import SnapshotTable, bucket_expr
@@ -69,13 +69,13 @@ class ReplayMetrics:
     deletes: int = 0
     elapsed_sec: float = 0.0
     per_epoch: list[dict] = field(default_factory=list)
-    # REPLAY_PROFILE=1 only: wall-seconds summed over all commits, split
-    # into cluster jobs (stats_collect, write_buckets) and driver-serial
-    # work (post_write footer/ckpt, snapshot_commit JSON) — everything
-    # else (plan/optimize, python glue, epoch listing) lands in
-    # driver_other at report time. The Amdahl evidence for the N->4N
-    # scaling claim: the serial share bounds achievable efficiency.
-    prof: dict = field(default_factory=dict)
+    # wall-seconds per commit phase, summed over all commits (see
+    # apply_batch), plus run()'s epoch_listing: cluster jobs
+    # (stats_collect, write_buckets, maintain, epoch_listing) vs
+    # driver-serial work (post_write footer/ckpt, snapshot_commit JSON,
+    # batch_other glue). The Amdahl evidence for the N->4N scaling
+    # claim: the serial share bounds achievable efficiency.
+    phases: dict = field(default_factory=dict)
 
     @property
     def events_per_sec(self) -> float:
@@ -85,8 +85,8 @@ class ReplayMetrics:
         """Fold one ``Replayer.apply_batch`` result into the totals —
         the one accounting both drivers use."""
         self.per_epoch.append(info)
-        for k, val in (info.get("prof") or {}).items():
-            self.prof[k] = self.prof.get(k, 0.0) + val
+        for k, val in info["phases"].items():
+            self.phases[k] = self.phases.get(k, 0.0) + val
         if info["skipped"]:
             return
         self.epochs_applied += n_epochs
@@ -206,11 +206,17 @@ class Replayer:
         delete accounting, and the horizon advance (sinks whose deletes
         are immediate) or the tombstone-GC tick, both behind
         _collect_safe. Counts ``events``, ``winners`` (keys written),
-        ``deletes`` (keys whose winner is a delete), ``stale_dropped``."""
+        ``deletes`` (keys whose winner is a delete), ``stale_dropped``.
+
+        ``phases`` splits the call's wall-seconds: ``stats_collect``,
+        the sink's merge phases, ``maintain`` (the post-commit policy)
+        and ``batch_other``, the remainder (planning, dup check,
+        checkpoint merge), so the phases sum to the call's wall."""
+        t0 = monotonic()
         epochs = [epoch] if isinstance(epoch, int) else list(epoch)
         applied = self.table.applied_epochs()
         if all(e in applied for e in epochs):
-            return {"epoch": epochs[-1], "skipped": True, "events": 0, "rows": 0}
+            return {"epoch": epochs[-1], "skipped": True, "events": 0, "rows": 0, "phases": {}}
 
         snap = self.table.snapshot()
         n_buckets = snap["n_buckets"]
@@ -233,8 +239,6 @@ class Replayer:
             self._horizon = self.table.gc_horizon()
         horizon = self._horizon
         if horizon:
-            from pyspark.sql import Observation
-
             pre_batch = batch
             stale_obs = Observation()
             batch = batch.observe(
@@ -263,8 +267,6 @@ class Replayer:
         # dedup'd counters are recomputed on that rare path below.
         cols = batch.columns
         ev_bytes = F.coalesce(F.col("n_tok") * 4, F.lit(0)) + F.length(self.key_col) + 16
-        from pyspark.sql import Observation
-
         dup_obs = Observation()
         observed = batch.observe(
             dup_obs,
@@ -330,11 +332,7 @@ class Replayer:
             self.key_col,
             *[c for c in [self.op_col, self.lsn_col] + payload_cols if c != self.key_col],
         )
-        import os as _os
-
-        _prof = _os.environ.get("REPLAY_PROFILE") == "1"
-        _t0_batch = monotonic()
-        _t = _t0_batch
+        t = monotonic()
         stats_rows = [
             r.asDict()
             for r in keyed.groupBy(bucket_expr(self.key_col, n_buckets).alias("_p"))
@@ -351,9 +349,7 @@ class Replayer:
             )
             .collect()
         ]
-        _stats_sec = monotonic() - _t
-        if _prof:
-            print(f"[prof] epoch={epochs[-1]} stats_collect={_stats_sec:.2f}s", flush=True)
+        phases = {"stats_collect": monotonic() - t}
         # dup detection: a replayed epoch among the k epochs of this
         # slice adds ~raw/(k+1) rows, so the trip level scales with k
         # instead of the fixed 10% that a >=10-epoch group dilutes past
@@ -426,7 +422,6 @@ class Replayer:
         last_lsn = max((s["last_lsn"] for s in stats), default=None)
         ckpt = self._merged_checkpoint_rows(stats)
 
-        _t = monotonic()
         res = self.table.merge(
             src,
             epoch=epochs,
@@ -437,8 +432,10 @@ class Replayer:
             touched_buckets=[s["partition"] for s in stats],
             dedupe_source=True,
         )
-        if _prof:
-            print(f"[prof] epoch={epochs[-1]} merge={monotonic() - _t:.2f}s", flush=True)
+        phases.update(res.phases)
+        keyed.unpersist()
+        # post-commit policy
+        t = monotonic()
         compacted = 0
         if (
             self.auto_compact
@@ -449,24 +446,6 @@ class Replayer:
                 self.compact_max_chain, self.compact_max_delta_ratio
             )
             compacted = c.buckets_rewritten if c is not None else 0
-            if _prof and compacted:
-                print(
-                    f"[prof] epoch={epochs[-1]} auto-compacted {compacted} buckets",
-                    flush=True,
-                )
-        keyed.unpersist()
-        prof = None
-        if _prof:
-            prof = dict(res.prof or {})
-            prof["stats_collect"] = _stats_sec
-            # driver glue between/around the two cluster actions: dup
-            # check, exact-dedupe rare path, checkpoint merge, plan time
-            prof["batch_other"] = max(
-                0.0, (monotonic() - _t0_batch) - _stats_sec - sum(
-                    (res.prof or {}).values()
-                )
-            )
-        # post-commit policy
         if self._gc_deletes is not None:
             self._gc_deletes += deletes
         if self.table.deletes_are_immediate:
@@ -493,6 +472,9 @@ class Replayer:
             and self._collect_safe(applied, epochs)
         ):
             self._maybe_gc_tombstones()
+        phases["maintain"] = monotonic() - t
+        # last, as the remainder: the phases sum to this call's wall
+        phases["batch_other"] = monotonic() - t0 - sum(phases.values())
         return {
             "epoch": epochs[-1],
             "skipped": False,
@@ -505,7 +487,7 @@ class Replayer:
             "snapshot": res.snapshot_id,
             "buckets_rewritten": res.buckets_rewritten,
             "buckets_compacted": compacted,
-            "prof": prof,
+            "phases": phases,
         }
 
     def _collect_safe(self, applied: EpochSet, epochs: list[int]) -> bool:
@@ -554,6 +536,7 @@ class Replayer:
             for r in log.select(self.epoch_col).distinct().orderBy(self.epoch_col).collect()
         ]
         pending = [e for e in epochs if e not in done]
+        m.phases["epoch_listing"] = monotonic() - t0
         m.epochs_skipped = len(epochs) - len(pending)
         if max_epochs is not None:
             pending = pending[:max_epochs]
@@ -568,7 +551,7 @@ class Replayer:
         m.elapsed_sec = monotonic() - t0
         return m
 
-    def _maybe_gc_tombstones(self) -> CommitResult | None:
+    def _maybe_gc_tombstones(self) -> None:
         """Run the tombstone-GC maintenance pass at the replay low-water
         mark, below which no event can reach row-level apply again.
         Behind _collect_safe any applied lsn qualifies; the min
@@ -580,11 +563,11 @@ class Replayer:
             # (Either None = unknown prior state: fall through. Residue
             # matters because an advancing low-water mark makes
             # above-mark tombstones eligible without any new delete.)
-            return None
+            return
         ckpt = self._ckpt or {}
         lwm = min((int(r["last_lsn"]) for r in ckpt.values()), default=None)
         if not lwm:
-            return None
+            return
         self._gc_deletes = 0
         stats = self.table.tombstone_stats(before_lsn=lwm)
         self._gc_residue = any(
@@ -605,15 +588,14 @@ class Replayer:
             tombstone_stats_precomputed=stats,
         )
         if not todo:
-            return None
+            return
         # eligible tombstones in delta-triggered buckets ride the
         # rewrite for free — same pass, same low-water mark
-        res = self.table.compact(buckets=todo, tombstones_before=lwm)
+        self.table.compact(buckets=todo, tombstones_before=lwm)
         # the compact commit advanced the persisted horizon to lwm (and
         # may have stamped its epoch); keep the in-process caches in step
         self._horizon = max(self._horizon or 0, lwm)
         self._horizon_epoch = None
-        return res
 
     def is_done(self, log: DataFrame) -> bool:
         """exiter.isDone analog: every epoch in the log is in the ledger.

@@ -83,4 +83,5 @@ def run_availablenow(
         "skipped": len(m.per_epoch) - m.epochs_applied,
         "deletes": m.deletes,
         "stale_dropped": m.events_stale_dropped,
+        "phases": m.phases,
     }

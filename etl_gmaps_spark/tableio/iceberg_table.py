@@ -509,4 +509,6 @@ class IcebergTable:
             )
             for i in range(0, len(drop), 100):  # bounded statements
                 self.spark.sql(unset_epochs_sql(self.identifier, drop[i : i + 100]))
+        # no phase split (empty phases): the Replayer books this MERGE
+        # under batch_other
         return CommitResult(-1, snap, -1, -1, epochs[-1] if epochs else None)

@@ -88,8 +88,9 @@ from __future__ import annotations
 
 import json
 import os
+import time
 import uuid
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 from typing import Any, Iterable, Iterator
 
 import pyarrow as pa
@@ -165,12 +166,12 @@ class CommitResult:
     # events ≈ bytes_rewritten / (E × avg_row_bytes); surfaced per-commit
     # in the ledger (commit_info) and aggregated by bench.py.
     bytes_rewritten: int = 0
-    # REPLAY_PROFILE=1 only: wall-seconds per commit phase —
+    # wall-seconds per merge phase, filled by every SnapshotTable.merge:
     # write_buckets (cluster job), post_write (driver serial: parquet
     # footer stats + checkpoint + ledger rollup), snapshot_commit
-    # (driver serial: metadata JSON write). Feeds the Amdahl
-    # decomposition in BENCH/BASELINE.md.
-    prof: dict | None = None
+    # (driver serial: metadata JSON write). Feeds Replayer.apply_batch's
+    # per-commit phases and the Amdahl decomposition in BENCH/BASELINE.md.
+    phases: dict = field(default_factory=dict)
 
 
 # Ledger keys at/above this value are OUT-OF-BAND: they are not log
@@ -1042,7 +1043,6 @@ class SnapshotTable:
         write-to-commit latency (600 s default vs the ~seconds the
         engine's own commits take)."""
         import shutil
-        import time
 
         current = self._current_version()
         versions = sorted(
@@ -1260,10 +1260,7 @@ class SnapshotTable:
             src = src.drop(lsn_col)
         src = src.drop(op_col)
 
-        import time as _time
-
-        _prof = os.environ.get("REPLAY_PROFILE") == "1"
-        _t = _time.monotonic()
+        t = time.monotonic()
         v = snap["version"] + 1
 
         if mode == "mor":
@@ -1367,12 +1364,8 @@ class SnapshotTable:
             # a CoW commit replaces each touched bucket's full state
             entries = {str(b): _entry(new_files.get(str(b), [])) for b in touched}
 
-        _prof_d: dict | None = None
-        if _prof:
-            _prof_d = {"write_buckets": _time.monotonic() - _t}
-            print(f"[prof]   write_buckets={_prof_d['write_buckets']:.2f}s", flush=True)
-            _t = _time.monotonic()
-
+        phases = {"write_buckets": time.monotonic() - t}
+        t = time.monotonic()
         rows_written, bytes_rewritten = _footer_stats(
             [f for fl in new_files.values() for f in fl]
         )
@@ -1408,16 +1401,13 @@ class SnapshotTable:
             properties=props,
             checkpoint_file=ckpt_file,
         )
-        if _prof_d is not None:
-            _prof_d["post_write"] = _time.monotonic() - _t
-            print(f"[prof]   post_write(footers+ckpt)={_prof_d['post_write']:.2f}s", flush=True)
-            _t = _time.monotonic()
+        phases["post_write"] = time.monotonic() - t
+        t = time.monotonic()
         self._commit_snapshot(new)
-        if _prof_d is not None:
-            _prof_d["snapshot_commit"] = _time.monotonic() - _t
+        phases["snapshot_commit"] = time.monotonic() - t
         return CommitResult(
             v, v, rows_written, len(touched), epochs[-1] if epochs else None,
-            bytes_rewritten, _prof_d,
+            bytes_rewritten, phases,
         )
 
 

@@ -118,6 +118,7 @@ def main() -> None:
             spark, log_path, table, os.path.join(args.workdir, "stream_ckpt"),
             schema=schema, auto_compact=not args.no_auto_compact,
         )
+        res["phases"] = {k: round(v, 3) for k, v in res["phases"].items()}
         print(json.dumps({"mode": "stream", "master": spark.sparkContext.master, **res}))
     else:
         log = spark.read.parquet(log_path)
@@ -146,6 +147,8 @@ def main() -> None:
                     "epochs_skipped": m.epochs_skipped,
                     "deletes": m.deletes,
                     "stale_dropped": m.events_stale_dropped,
+                    # where the replay wall went, summed over commits
+                    "phases": {k: round(v, 3) for k, v in m.phases.items()},
                     "final_rows": table.read().count(),
                     # SnapshotTable reports its version; IcebergTable's
                     # descriptor has no version key (the catalog owns it)

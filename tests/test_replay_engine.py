@@ -23,12 +23,26 @@ def make_table(spark, tmp_path, base=None, n_buckets=8):
     )
 
 
-def test_incremental_replay_matches_oracle(spark, tmp_path):
+def test_incremental_replay_matches_oracle(spark, tmp_path, capsys):
     base = gen_base(spark, n_docs=300, seed=42)
     log = gen_changelog(spark, n_docs=300, n_events=3000, seed=42, epoch_size=500)
     table = make_table(spark, tmp_path, base)
     m = Replayer(table).run(log)
     assert m.epochs_applied > 0 and m.events_processed == 3000  # dupes dropped
+    # every commit reports its phase split as data, never as prints
+    commit_phases = {
+        "stats_collect", "write_buckets", "post_write", "snapshot_commit",
+        "maintain", "batch_other",
+    }
+    applied = [info for info in m.per_epoch if not info["skipped"]]
+    assert applied
+    for info in applied:
+        assert set(info["phases"]) == commit_phases
+        assert all(v >= 0 for v in info["phases"].values())
+    assert set(m.phases) == commit_phases | {"epoch_listing"}
+    assert all(v >= 0 for v in m.phases.values())
+    assert sum(m.phases.values()) <= m.elapsed_sec
+    assert "[prof]" not in capsys.readouterr().out
     expected = replay_oracle(base.toPandas(), log.toPandas())
     assert_table_equal(table.read(), expected)
     assert Replayer(table).is_done(log)

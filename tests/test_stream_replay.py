@@ -5,6 +5,7 @@ loss must be a no-op thanks to the table's epoch ledger."""
 from __future__ import annotations
 
 import shutil
+from time import monotonic
 
 from pyspark.sql import functions as F
 
@@ -16,7 +17,7 @@ from etl_gmaps_spark.tableio import SnapshotTable
 from tests.conftest import assert_table_equal
 
 
-def test_streaming_replay_matches_oracle(spark, tmp_path):
+def test_streaming_replay_matches_oracle(spark, tmp_path, capsys):
     base = gen_base(spark, n_docs=200, seed=21)
     log = gen_changelog(spark, n_docs=200, n_events=2000, seed=21, epoch_size=500, dup_epochs=())
     log_path = str(tmp_path / "log")
@@ -24,11 +25,21 @@ def test_streaming_replay_matches_oracle(spark, tmp_path):
     schema = spark.read.parquet(log_path).schema
 
     table = SnapshotTable.create(spark, str(tmp_path / "tbl"), TARGET_SCHEMA, base_df=base)
+    t0 = monotonic()
     res = run_availablenow(spark, log_path, table, str(tmp_path / "ckpt"), schema=schema)
+    wall = monotonic() - t0
     assert res["events"] == 2000
     # the shared commit step reports deletes and stale drops (no GC
     # horizon exists on a streamed table, so nothing is dropped)
     assert res["deletes"] > 0 and res["stale_dropped"] == 0
+    # ... and its phase split, summed over micro-batches, as data
+    assert set(res["phases"]) == {
+        "stats_collect", "write_buckets", "post_write", "snapshot_commit",
+        "maintain", "batch_other",
+    }
+    assert all(v >= 0 for v in res["phases"].values())
+    assert sum(res["phases"].values()) <= wall
+    assert "[prof]" not in capsys.readouterr().out
 
     expected = replay_oracle(base.toPandas(), log.toPandas())
     assert_table_equal(table.read(), expected)
