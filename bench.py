@@ -164,7 +164,7 @@ def bench_replay(spark) -> dict:
             # threshold trips after every commit and the replay would
             # measure CoW twice over; see the mor-leg comment below
             # gc_tombstones off too: the headline times the apply path;
-            # with BENCH_EPOCHS >= gc_every the GC tick would run a
+            # with BENCH_EPOCHS >= GC_EVERY the GC tick would run a
             # full-table tombstone_stats aggregation (and possibly
             # rewrites) inside the timed window on byte-identical code
             t0 = monotonic()

@@ -27,8 +27,9 @@ def get_spark(
     ``cpus`` maps to ``local[cpus]``; ``shuffle_partitions`` defaults to
     the same number so one shuffle wave saturates the cores without
     creating tiny partitions (at cluster scale you would size this to
-    ``input_bytes / target_partition_bytes`` instead — the replay driver
-    does exactly that per batch, see streaming/replay.py).
+    ``input_bytes / target_partition_bytes`` instead). It is one
+    session-wide setting; AQE's partition coalescing then merges the
+    small shuffle partitions of each query at runtime.
     """
     cpus = cpus or DEFAULT_CPUS
     # SPARK_GRAFT_EXECUTORS=k switches to local-cluster[k, cpus, mem]:

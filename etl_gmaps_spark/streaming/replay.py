@@ -33,10 +33,24 @@ from time import monotonic
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
-from etl_gmaps_spark.tableio.snapshot_table import SnapshotTable, bucket_expr
-from etl_gmaps_spark.tableio.snapshot_table import OUT_OF_BAND_EPOCH_BASE, EpochSet
+from etl_gmaps_spark.tableio.snapshot_table import (
+    LSN,
+    OP,
+    OUT_OF_BAND_EPOCH_BASE,
+    EpochSet,
+    SnapshotTable,
+    bucket_expr,
+)
 
-ENVELOPE_COLS = ("lsn", "epoch", "ts")
+# the change-log envelope (schemas.CHANGELOG_SCHEMA): total-order lsn,
+# epoch slice, op discriminator and event time. Every column that is
+# neither envelope nor the table's key column is payload.
+EPOCH = "epoch"
+ENVELOPE_COLS = (LSN, EPOCH, OP, "ts")
+
+# tombstone-GC cadence: a GC tick runs on commits whose snapshot id is
+# a multiple of this (see Replayer.apply_batch)
+GC_EVERY = 16
 
 
 def _utc(dt):
@@ -58,7 +72,6 @@ class ReplayMetrics:
     epochs_applied: int = 0
     epochs_skipped: int = 0
     events_processed: int = 0
-    rows_upserted: int = 0
     # events refused because their lsn is below the table's GC horizon:
     # the tombstones that would have guarded them were physically
     # collected, so applying them could resurrect deleted keys. Stale
@@ -91,7 +104,6 @@ class ReplayMetrics:
             return
         self.epochs_applied += n_epochs
         self.events_processed += info["events"]
-        self.rows_upserted += info["rows"]
         self.events_stale_dropped += info["stale_dropped"]
         self.deletes += info["deletes"]
 
@@ -100,45 +112,29 @@ class Replayer:
     def __init__(
         self,
         table: SnapshotTable,
-        key_col: str = "doc_id",
-        lsn_col: str = "lsn",
-        op_col: str = "op",
-        epoch_col: str = "epoch",
         salt_buckets: int = 0,
         auto_compact: bool = True,
-        compact_max_chain: int = 8,
-        compact_max_delta_ratio: float = 0.5,
         gc_tombstones: bool = True,
-        gc_every: int = 16,
-        gc_tombstone_ratio: float = 0.5,
     ):
         self.table = table
-        self.key_col = key_col
-        self.lsn_col = lsn_col
-        self.op_col = op_col
-        self.epoch_col = epoch_col
         self.salt_buckets = salt_buckets
         # MoR maintenance policy (VERDICT r3 #4): after each commit on a
         # merge-on-read table, compact the buckets whose delta chain
-        # crossed (depth >= compact_max_chain OR delta bytes >=
-        # compact_max_delta_ratio x base bytes). Keeps read cost bounded
-        # during long small-epoch replays without a hand-scheduled job;
-        # the plan check itself is driver-side metadata, no Spark job.
+        # crossed the SnapshotTable.maintenance_plan thresholds. Keeps
+        # read cost bounded during long small-epoch replays without a
+        # hand-scheduled job; the plan check itself is driver-side
+        # metadata, no Spark job.
         self.auto_compact = auto_compact
-        self.compact_max_chain = compact_max_chain
-        self.compact_max_delta_ratio = compact_max_delta_ratio
-        # tombstone GC policy (VERDICT r4 #3): roughly every gc_every
+        # tombstone GC policy (VERDICT r4 #3): roughly every GC_EVERY
         # commits (anchored to the table's persistent snapshot version,
         # so bounded-fetch polls and fresh Replayers share one cadence),
         # rewrite any bucket whose GC-eligible tombstone mass (deleted
-        # guard rows below the replay low-water mark) reaches
-        # gc_tombstone_ratio of its rows. The mass check is ONE narrow
-        # Spark aggregation (key + 2 meta columns), hence the coarser
-        # cadence than the metadata-only auto_compact check. Applies to
-        # BOTH merge modes — CoW tables accumulate tombstones too.
+        # guard rows below the replay low-water mark) crosses the
+        # maintenance_plan ratio. The mass check is ONE narrow Spark
+        # aggregation (key + 2 meta columns), hence the coarser cadence
+        # than the metadata-only auto_compact check. Applies to BOTH
+        # merge modes — CoW tables accumulate tombstones too.
         self.gc_tombstones = gc_tombstones
-        self.gc_every = max(1, gc_every)
-        self.gc_tombstone_ratio = gc_tombstone_ratio
         # deletes applied since the last GC check. None = unknown (a
         # fresh Replayer may face tombstones a PREVIOUS run left, so
         # the first cadence tick always checks); afterwards an
@@ -216,10 +212,10 @@ class Replayer:
         epochs = [epoch] if isinstance(epoch, int) else list(epoch)
         applied = self.table.applied_epochs()
         if all(e in applied for e in epochs):
-            return {"epoch": epochs[-1], "skipped": True, "events": 0, "rows": 0, "phases": {}}
+            return {"epoch": epochs[-1], "skipped": True, "events": 0, "phases": {}}
 
         snap = self.table.snapshot()
-        n_buckets = snap["n_buckets"]
+        key_col, n_buckets = snap["key_col"], snap["n_buckets"]
 
         # GC-horizon guard: tombstones with lsn below the horizon have
         # been physically collected (SnapshotTable.compact GC leg), or
@@ -243,7 +239,7 @@ class Replayer:
             stale_obs = Observation()
             batch = batch.observe(
                 stale_obs, F.count(F.lit(1)).alias("pre_rows")
-            ).filter(F.col(self.lsn_col) >= F.lit(horizon))
+            ).filter(F.col(LSN) >= F.lit(horizon))
 
         # ONE full scan of the batch serves every pre-merge need
         # (VERDICT r1 #2 — the separate stats job and the merge job's
@@ -265,8 +261,7 @@ class Replayer:
         # whole replayed epochs of byte-identical rows, so a dup slice
         # has raw ≈ 2x distinct — far outside HLL error — and the EXACT
         # dedup'd counters are recomputed on that rare path below.
-        cols = batch.columns
-        ev_bytes = F.coalesce(F.col("n_tok") * 4, F.lit(0)) + F.length(self.key_col) + 16
+        ev_bytes = F.coalesce(F.col("n_tok") * 4, F.lit(0)) + F.length(key_col) + 16
         dup_obs = Observation()
         observed = batch.observe(
             dup_obs,
@@ -275,26 +270,26 @@ class Replayer:
             # inside a batch_epochs-grouped slice, where the duplicate is
             # only ~1/k of the rows — 2% HLL noise would drown it past
             # k≈5. 0.5% keeps a 6-sigma no-false-trip floor up to k≈30.
-            F.approx_count_distinct(self.lsn_col, rsd=0.005).alias("approx_rows"),
+            F.approx_count_distinct(LSN, rsd=0.005).alias("approx_rows"),
         )
         counters = [
             F.count(F.lit(1)).alias("_cnt"),
-            F.max(self.lsn_col).alias("last_lsn"),
+            F.max(LSN).alias("last_lsn"),
             F.sum(ev_bytes).alias("_bytes"),
             F.max("ts").alias("updated_at"),
             # 1 when the key's winning (max-lsn) event is a delete: the
             # delete count rides the same partial/final aggregation
-            F.max_by((F.col(self.op_col) == "D").cast("int"), self.lsn_col).alias("_del"),
+            F.max_by((F.col(OP) == "D").cast("int"), LSN).alias("_del"),
         ]
         if self.salt_buckets and self.salt_buckets > 1:
             # explicit two-phase reduce for pathological hot keys: the
             # salt comes from the LSN, so one key's events spread over
             # salt_buckets reducers before the final per-key merge.
-            salt = F.pmod(F.xxhash64(F.col(self.lsn_col)), F.lit(self.salt_buckets))
+            salt = F.pmod(F.xxhash64(F.col(LSN)), F.lit(self.salt_buckets))
             keyed = (
-                observed.groupBy(self.key_col, salt.alias("_salt"))
+                observed.groupBy(key_col, salt.alias("_salt"))
                 .agg(*counters)
-                .groupBy(self.key_col)
+                .groupBy(key_col)
                 .agg(
                     F.sum("_cnt").alias("_cnt"),
                     F.max("last_lsn").alias("last_lsn"),
@@ -304,10 +299,10 @@ class Replayer:
                 )
             )
         else:
-            keyed = observed.groupBy(self.key_col).agg(*counters)
+            keyed = observed.groupBy(key_col).agg(*counters)
         keyed = keyed.persist()
-        payload_cols = [c for c in cols if c not in ENVELOPE_COLS and c != self.op_col]
-        win = keyed.select(F.col(self.key_col).alias("_w_key"), "last_lsn")
+        payload_cols = [c for c in batch.columns if c not in ENVELOPE_COLS + (key_col,)]
+        win = keyed.select(F.col(key_col).alias("_w_key"), "last_lsn")
         # join strategy ladder: broadcast while the winner-key set fits
         # the (raised) threshold — the payload never shuffles; beyond
         # that the SHUFFLE_HASH hint keeps the fallback a hash join —
@@ -315,8 +310,8 @@ class Replayer:
         # two-phase reduce exists to avoid.
         cand = batch.alias("_b").join(
             win.hint("shuffle_hash").alias("_w"),
-            (F.col(f"_b.{self.key_col}") == F.col("_w._w_key"))
-            & (F.col(f"_b.{self.lsn_col}") == F.col("_w.last_lsn")),
+            (F.col(f"_b.{key_col}") == F.col("_w._w_key"))
+            & (F.col(f"_b.{LSN}") == F.col("_w.last_lsn")),
             "leftsemi",
         )
         # cand has unique keys already — only the winner (key, lsn) row
@@ -325,17 +320,14 @@ class Replayer:
         # byte-identical copies. Collapsing those here used to cost a
         # full groupBy(max_by) shuffle of the winner payload EVERY
         # epoch; instead the merge dedupes in-partition after its own
-        # bucket repartition (dedupe_source=True below), where the
+        # bucket repartition (see SnapshotTable.merge), where the
         # dedupe's sort feeds the join's sort requirement — zero extra
         # shuffle on the hot path.
-        src = cand.select(
-            self.key_col,
-            *[c for c in [self.op_col, self.lsn_col] + payload_cols if c != self.key_col],
-        )
+        src = cand.select(key_col, OP, LSN, *payload_cols)
         t = monotonic()
         stats_rows = [
             r.asDict()
-            for r in keyed.groupBy(bucket_expr(self.key_col, n_buckets).alias("_p"))
+            for r in keyed.groupBy(bucket_expr(key_col, n_buckets).alias("_p"))
             .agg(
                 F.sum("_cnt").alias("_raw_rows"),
                 F.max("last_lsn").alias("last_lsn"),
@@ -390,8 +382,8 @@ class Replayer:
             # projection first: the payload never enters this shuffle)
             dedup_stats = (
                 batch.select(
-                    bucket_expr(self.key_col, n_buckets).alias("_p"),
-                    F.col(self.lsn_col).alias("_lsn_d"),
+                    bucket_expr(key_col, n_buckets).alias("_p"),
+                    F.col(LSN).alias("_lsn_d"),
                     ev_bytes.alias("_ev_bytes"),
                 )
                 .dropDuplicates(["_lsn_d"])
@@ -426,11 +418,8 @@ class Replayer:
             src,
             epoch=epochs,
             checkpoint_rows=ckpt,
-            op_col=self.op_col,
-            lsn_col=self.lsn_col,
             stats={"events": events},
             touched_buckets=[s["partition"] for s in stats],
-            dedupe_source=True,
         )
         phases.update(res.phases)
         keyed.unpersist()
@@ -442,9 +431,7 @@ class Replayer:
             and snap["merge_mode"] == "mor"
             and res.buckets_rewritten
         ):
-            c = self.table.maintain(
-                self.compact_max_chain, self.compact_max_delta_ratio
-            )
+            c = self.table.maintain()
             compacted = c.buckets_rewritten if c is not None else 0
         if self._gc_deletes is not None:
             self._gc_deletes += deletes
@@ -464,11 +451,11 @@ class Replayer:
         elif (
             # GC cadence rides the table's PERSISTENT snapshot version,
             # not a per-run commit counter: a driver that polls with
-            # max_epochs=K < gc_every (or builds a fresh Replayer per
+            # max_epochs=K < GC_EVERY (or builds a fresh Replayer per
             # poll, jobs/replay_job.py) would reset a local counter
             # every invocation and never GC
             self.gc_tombstones
-            and int(res.snapshot_id or 0) % self.gc_every == 0
+            and int(res.snapshot_id or 0) % GC_EVERY == 0
             and self._collect_safe(applied, epochs)
         ):
             self._maybe_gc_tombstones()
@@ -479,7 +466,6 @@ class Replayer:
             "epoch": epochs[-1],
             "skipped": False,
             "events": events,
-            "rows": events,
             "stale_dropped": stale_dropped,
             "last_lsn": last_lsn,
             "winners": winners,
@@ -533,7 +519,7 @@ class Replayer:
         done = self.table.applied_epochs()
         epochs = [
             r[0]
-            for r in log.select(self.epoch_col).distinct().orderBy(self.epoch_col).collect()
+            for r in log.select(EPOCH).distinct().orderBy(EPOCH).collect()
         ]
         pending = [e for e in epochs if e not in done]
         m.phases["epoch_listing"] = monotonic() - t0
@@ -543,7 +529,7 @@ class Replayer:
 
         for group_start in range(0, len(pending), batch_epochs):
             group = [int(e) for e in pending[group_start : group_start + batch_epochs]]
-            batch = log.filter(F.col(self.epoch_col).isin(group))
+            batch = log.filter(F.col(EPOCH).isin(group))
             m.add(self.apply_batch(batch, epoch=group), n_epochs=len(group))
             if fail_after_epochs is not None and m.epochs_applied >= fail_after_epochs:
                 m.elapsed_sec = monotonic() - t0
@@ -577,16 +563,9 @@ class Replayer:
         # (metadata-only) ride along ONLY when auto-compaction is ON —
         # with auto_compact=False this cadence must be GC-only, or it
         # silently re-enables the compaction the caller turned off —
-        # and the tombstone leg reuses the aggregation above instead of
-        # re-running it (the ratio predicate lives in maintenance_plan,
-        # one source of truth).
-        todo = self.table.maintenance_plan(
-            self.compact_max_chain if self.auto_compact else None,
-            self.compact_max_delta_ratio if self.auto_compact else None,
-            tombstone_ratio=self.gc_tombstone_ratio,
-            tombstone_before=lwm,
-            tombstone_stats_precomputed=stats,
-        )
+        # and the tombstone leg reuses the aggregation above (the ratio
+        # predicate lives in maintenance_plan, one source of truth).
+        todo = self.table.maintenance_plan(delta_legs=self.auto_compact, tombstones=stats)
         if not todo:
             return
         # eligible tombstones in delta-triggered buckets ride the
@@ -606,16 +585,16 @@ class Replayer:
         literal list."""
         done = self.table.applied_epochs()
         if not done:
-            return log.select(self.epoch_col).distinct().count() == 0
+            return log.select(EPOCH).distinct().count() == 0
         applied = F.lit(False)
         for b, w in done.ranges:
             applied = applied | (
-                (F.col(self.epoch_col) >= F.lit(int(b)))
-                & (F.col(self.epoch_col) < F.lit(int(w)))
+                (F.col(EPOCH) >= F.lit(int(b)))
+                & (F.col(EPOCH) < F.lit(int(w)))
             )
         if done.explicit:
-            applied = applied | F.col(self.epoch_col).isin([int(e) for e in done.explicit])
-        remaining = log.select(self.epoch_col).distinct().filter(~applied).count()
+            applied = applied | F.col(EPOCH).isin([int(e) for e in done.explicit])
+        remaining = log.select(EPOCH).distinct().filter(~applied).count()
         return remaining == 0
 
 

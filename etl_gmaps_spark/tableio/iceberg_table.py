@@ -16,6 +16,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from etl_gmaps_spark.tableio.snapshot_table import (
+    LSN,
+    OP,
     CommitResult,
     EpochSet,
     _normalize_epochs,
@@ -397,11 +399,8 @@ class IcebergTable:
         winners: DataFrame,
         epoch: int | list[int] | None = None,
         checkpoint_rows: list[dict] | None = None,
-        op_col: str = "op",
-        lsn_col: str | None = None,
         stats: dict[str, Any] | None = None,
         touched_buckets: list[int] | None = None,
-        dedupe_source: bool = False,
     ) -> CommitResult:
         """SnapshotTable.merge surface over Iceberg SQL, so the same
         Replayer drives either sink (north rule: exactly-once MERGE
@@ -410,12 +409,11 @@ class IcebergTable:
         convention); ``touched_buckets`` is accepted and ignored
         (Iceberg's own bucket-partition pruning replaces the
         manifest-window optimization — the parameter exists so one
-        Replayer call serves both sinks); ``lsn_col`` adds the
-        row-level LWW guard to the MERGE arms when the target stores
-        the column; ``dedupe_source=True`` dropDuplicates the source on
-        the key (MERGE requires unique source keys);
-        ``checkpoint_rows`` (lineage dicts) land as `cdc.ckpt.<p>`
-        properties."""
+        Replayer call serves both sinks); the row-level LWW guard joins
+        the MERGE arms whenever ``lsn`` is in the target or the source;
+        the source is dropDuplicates'd on the key (MERGE requires unique
+        source keys); ``checkpoint_rows`` (lineage dicts) land as
+        `cdc.ckpt.<p>` properties."""
         epochs = (
             None if epoch is None
             else [int(epoch)] if isinstance(epoch, int)
@@ -431,18 +429,16 @@ class IcebergTable:
         # merge, so the parity surface must too
         if epochs and all(_applied(e) for e in epochs):
             return CommitResult(-1, -1, 0, 0, epochs[-1])
-        payload = [f.name for f in winners.schema.fields if f.name != op_col]
+        payload = [f.name for f in winners.schema.fields if f.name != OP]
         target_cols = {f.name for f in self.schema().fields}
         for f in winners.schema.fields:
-            if f.name not in target_cols and f.name != op_col:
+            if f.name not in target_cols and f.name != OP:
                 self.spark.sql(add_column_sql(self.identifier, f.name, f.dataType))
         key = winners.columns[0]
-        if dedupe_source:
-            winners = winners.dropDuplicates([key])
-        winners.createOrReplaceTempView("_cdc_source")
-        guard = lsn_col if lsn_col and lsn_col in target_cols | set(payload) else None
+        winners.dropDuplicates([key]).createOrReplaceTempView("_cdc_source")
+        guard = LSN if LSN in target_cols | set(payload) else None
         pre = self._current_snapshot_id()
-        self.spark.sql(merge_sql(self.identifier, key, payload, op_col, lsn_col=guard))
+        self.spark.sql(merge_sql(self.identifier, key, payload, OP, lsn_col=guard))
         post = self._current_snapshot_id()
         # a MERGE that changes zero rows produces NO new snapshot —
         # attributing "the latest snapshot" would stamp the epoch onto

@@ -95,7 +95,7 @@ from typing import Any, Iterable, Iterator
 
 import pyarrow as pa
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -118,6 +118,11 @@ BUCKET_COL = "_bucket"
 LSN_COL = "_lsn"  # row-level LWW guard: lsn of the writer that produced the row
 DELETED_COL = "_deleted"  # tombstone: key is dead as of _lsn (delete-then-stale-replay safety)
 META_COLS = (LSN_COL, DELETED_COL)
+# merge-source envelope (schemas.CHANGELOG_SCHEMA names): the op
+# discriminator ('I'/'U' upsert, 'D' delete) and the optional source
+# lsn that merge() stores as LSN_COL
+OP = "op"
+LSN = "lsn"
 
 # Identifies the bucket-assignment function a table was persisted with.
 # bucket_expr below == pmod(murmur3_x86_32(key, seed=42), B). Any change
@@ -131,6 +136,14 @@ BUCKET_HASH = "murmur3_pmod_v1"
 FORMAT_VERSION = 1
 
 MANIFEST_COMPACT_AT = 32  # fold the manifest list when it grows past this
+# Maintenance policy (maintenance_plan): compact a MoR bucket once its
+# delta chain is COMPACT_MAX_CHAIN files deep or its delta bytes reach
+# COMPACT_MAX_DELTA_RATIO x its base bytes; the tombstone-GC leg
+# rewrites a bucket once its GC-eligible tombstones reach
+# GC_TOMBSTONE_RATIO of its rows.
+COMPACT_MAX_CHAIN = 8
+COMPACT_MAX_DELTA_RATIO = 0.5
+GC_TOMBSTONE_RATIO = 0.5
 LEDGER_KEEP_DEFAULT = 64  # full per-commit ledger rows kept before roll-up
 # MoR reconcile: below this total delta FILE size the delta KEY SET
 # broadcasts and untouched base rows bypass the per-key window
@@ -607,8 +620,6 @@ class SnapshotTable:
         deltas = [f for e in sel.values() for f in e["deltas"]]
         if not deltas:
             return self._read_files(clean, schema)
-        from pyspark.sql import Window as W
-
         key_col = snap["key_col"]
         # Anchored to the table layout (…/s{N}-{nonce}/_bucket=…): an
         # unanchored /s(\d+)/ took the FIRST match anywhere in the
@@ -640,7 +651,7 @@ class SnapshotTable:
             contested = self._read_files(dirty_base + deltas, schema).withColumn(
                 "_seq", seq
             )
-        w = W.partitionBy(key_col).orderBy(
+        w = Window.partitionBy(key_col).orderBy(
             F.col(LSN_COL).desc_nulls_last(), F.col("_seq").desc()
         )
         reconciled = (
@@ -896,9 +907,7 @@ class SnapshotTable:
         self._commit_snapshot(new)
         return CommitResult(v, v, rows_written, len(todo), None, bytes_rewritten)
 
-    def tombstone_stats(
-        self, before_lsn: int | None = None, buckets: list[int] | None = None
-    ) -> dict[int, dict]:
+    def tombstone_stats(self, before_lsn: int | None = None) -> dict[int, dict]:
         """Per-bucket ``{rows, dead}`` over the reconciled state: ONE
         column-pruned Spark aggregation (key + the two meta columns —
         the payload never leaves the scan). ``dead`` counts GC-eligible
@@ -907,14 +916,14 @@ class SnapshotTable:
         the only maintenance input that needs a cluster job (parquet
         footers can't count a boolean column), so callers run it on a
         coarser cadence than the metadata-only delta-chain checks — see
-        Replayer.gc_every."""
+        replay.GC_EVERY."""
         snap = self.snapshot()
         any_dead = F.coalesce(F.col(DELETED_COL), F.lit(False))
         dead = any_dead
         if before_lsn is not None:
             dead = dead & (F.col(LSN_COL) < F.lit(int(before_lsn)))
         rows = (
-            self._reconciled(snap, buckets=buckets)
+            self._reconciled(snap)
             .select(
                 bucket_expr(snap["key_col"], snap["n_buckets"]).alias("_b"),
                 dead.cast("long").alias("_dead"),
@@ -943,68 +952,44 @@ class SnapshotTable:
         }
 
     def maintenance_plan(
-        self,
-        max_chain: int | None = 8,
-        max_delta_ratio: float | None = 0.5,
-        tombstone_ratio: float | None = None,
-        tombstone_before: int | None = None,
-        tombstone_stats_precomputed: dict[int, dict] | None = None,
+        self, delta_legs: bool = True, tombstones: dict[int, dict] | None = None
     ) -> list[int]:
         """Buckets whose MoR delta chain warrants compaction: chain depth
-        ≥ ``max_chain`` files, OR delta bytes ≥ ``max_delta_ratio`` ×
-        base bytes. Either delta-leg threshold may be ``None`` to
-        disable that leg — a GC-only pass (tombstone legs set, delta
-        legs None) must never compact chains a caller explicitly left
-        alone with ``auto_compact=False``. Driver-side metadata only —
-        manifests cache per-file
-        sizes at write time (``base_sizes``/``delta_sizes``, see
-        ``_entry``), so the plan is a pure manifest walk with NO stat
-        calls and no Spark job, cheap enough after every commit even at
-        10^5 buckets (the r4 watch item).
+        ≥ COMPACT_MAX_CHAIN files, OR delta bytes ≥
+        COMPACT_MAX_DELTA_RATIO × base bytes. ``delta_legs=False``
+        skips both — a GC-only pass must never compact chains a caller
+        explicitly left alone with ``auto_compact=False``. Driver-side
+        metadata only — manifests cache per-file sizes at write time
+        (``base_sizes``/``delta_sizes``, see ``_entry``), so the plan is
+        a pure manifest walk with NO stat calls and no Spark job, cheap
+        enough after every commit even at 10^5 buckets (the r4 watch
+        item).
 
-        Tombstone GC leg (VERDICT r4 #3) — opt-in via BOTH
-        ``tombstone_ratio`` and ``tombstone_before``: also plan any
-        bucket whose GC-eligible tombstone mass (deleted rows with
-        ``_lsn < tombstone_before``) is ≥ ``tombstone_ratio`` of its
-        rows. Unlike the delta leg this runs one narrow Spark
-        aggregation (tombstone_stats), so schedule it on a coarser
-        cadence. ``tombstone_before`` must be a replay low-water mark:
-        an lsn such that no event below it can ever reach row-level
-        apply again (epochs are lsn-monotone slices and the epoch
-        ledger rejects re-delivered applied epochs wholesale, so the
-        min per-bucket checkpointed last_lsn qualifies while the ledger
-        is contiguous — see Replayer._collect_safe)."""
-        snap = self.snapshot()
+        Tombstone GC leg (VERDICT r4 #3): ``tombstones`` is a
+        ``tombstone_stats(before_lsn=mark)`` result the caller already
+        ran; also plan any bucket whose GC-eligible tombstone mass is ≥
+        GC_TOMBSTONE_RATIO of its rows. The mark must be a replay
+        low-water mark: an lsn such that no event below it can ever
+        reach row-level apply again (epochs are lsn-monotone slices and
+        the epoch ledger rejects re-delivered applied epochs wholesale,
+        so the min per-bucket checkpointed last_lsn qualifies while the
+        ledger is contiguous — see Replayer._collect_safe)."""
         todo: set[int] = set()
-        for b, e in self._resolve(snap).items():
-            deltas = e["deltas"]
-            if not deltas:
-                continue
-            if max_chain is not None and len(deltas) >= max_chain:
-                todo.add(int(b))
-                continue
-            if max_delta_ratio is None:
-                continue
-            dbytes, bbytes = sum(e["delta_sizes"]), sum(e["base_sizes"])
-            if dbytes >= max_delta_ratio * max(1, bbytes):
-                todo.add(int(b))
-        if tombstone_ratio is not None and tombstone_before is not None:
-            # callers that already ran the (cluster-job) aggregation for
-            # the same mark pass it in; the threshold predicate lives
-            # here either way — one source of truth
-            stats = (
-                tombstone_stats_precomputed
-                if tombstone_stats_precomputed is not None
-                else self.tombstone_stats(before_lsn=tombstone_before)
-            )
-            for b, st in stats.items():
-                if st["dead"] > 0 and st["dead"] >= tombstone_ratio * max(1, st["rows"]):
+        if delta_legs:
+            for b, e in self._resolve(self.snapshot()).items():
+                deltas = e["deltas"]
+                if deltas and (
+                    len(deltas) >= COMPACT_MAX_CHAIN
+                    or sum(e["delta_sizes"])
+                    >= COMPACT_MAX_DELTA_RATIO * max(1, sum(e["base_sizes"]))
+                ):
                     todo.add(int(b))
+        for b, st in (tombstones or {}).items():
+            if st["dead"] > 0 and st["dead"] >= GC_TOMBSTONE_RATIO * max(1, st["rows"]):
+                todo.add(int(b))
         return sorted(todo)
 
-    def maintain(
-        self, max_chain: int | None = 8, max_delta_ratio: float | None = 0.5
-    ) -> CommitResult | None:
+    def maintain(self) -> CommitResult | None:
         """Threshold-triggered incremental compaction (VERDICT r3 #4):
         compact ONLY the buckets whose delta chains crossed the policy —
         the automatic counterpart of Iceberg's scheduled
@@ -1014,7 +999,7 @@ class SnapshotTable:
         each commit on MoR tables (auto_compact=True, the default);
         standalone jobs can call it on their own cadence. Returns None
         when no bucket crossed the threshold."""
-        todo = self.maintenance_plan(max_chain, max_delta_ratio)
+        todo = self.maintenance_plan()
         if not todo:
             return None
         return self.compact(buckets=todo)
@@ -1042,8 +1027,6 @@ class SnapshotTable:
         and pointer is presumed dead — size the guard above the worst
         write-to-commit latency (600 s default vs the ~seconds the
         engine's own commits take)."""
-        import shutil
-
         current = self._current_version()
         versions = sorted(
             int(f[1:-5]) for f in os.listdir(self.meta_dir)
@@ -1128,7 +1111,7 @@ class SnapshotTable:
         for f in os.listdir(self.meta_dir):
             p = os.path.join(self.meta_dir, f)
             if f.startswith("ckpt-") and p not in live_ckpts and not _orphan_guarded(p):
-                shutil.rmtree(p, ignore_errors=True) if os.path.isdir(p) else os.remove(p)
+                os.remove(p)
         return {"removed_files": removed_files, "removed_snapshots": removed_snaps, "kept": sorted(keep)}
 
     def evolve_schema(self, new_fields: list[T.StructField]) -> T.StructType:
@@ -1146,29 +1129,22 @@ class SnapshotTable:
         winners: DataFrame,
         epoch: int | list[int] | None = None,
         checkpoint_rows: list[dict] | None = None,
-        op_col: str = "op",
-        lsn_col: str = "lsn",
         stats: dict[str, Any] | None = None,
         touched_buckets: list[int] | None = None,
-        dedupe_source: bool = False,
     ) -> CommitResult:
         """MERGE INTO: per-key upsert/delete with a ROW-LEVEL
         last-writer-wins guard; bucket-granular CoW or MoR deltas
         depending on the table's ``merge_mode``.
 
-        ``winners`` must have unique keys (the LWW reduce guarantees
-        this — Iceberg MERGE has the same unique-source-key requirement)
-        and carry ``op_col`` ('I'/'U' upsert, 'D' delete), optionally
-        ``lsn_col``, plus payload columns.
-
-        ``dedupe_source=True`` relaxes the unique-key contract to
-        "duplicate keys carry byte-identical rows" (replayed-delivery
-        duplicates): the source is dropDuplicates'd on the key AFTER
-        the bucket repartition, so the dedupe executes in-partition
-        with zero extra shuffle, and its sort-by-key output feeds the
-        sort-merge join's own sort requirement — the dedupe is
-        effectively free. This lets the replay hot path skip its own
-        pre-merge max_by shuffle entirely.
+        ``winners`` carries the table's key column, ``op`` ('I'/'U'
+        upsert, 'D' delete), optionally ``lsn``, plus payload columns.
+        Its keys must be unique up to byte-identical duplicates
+        (replayed delivery): the source is dropDuplicates'd on the key
+        AFTER the bucket repartition, so the dedupe executes
+        in-partition with zero extra shuffle, and its sort-by-key
+        output feeds the sort-merge join's own sort requirement — the
+        dedupe is effectively free. This lets the replay hot path skip
+        its own pre-merge max_by shuffle entirely.
 
         ``checkpoint_rows`` (per-partition lineage dicts, see
         CHECKPOINT_PA_SCHEMA) is written with pyarrow as this commit's
@@ -1201,8 +1177,7 @@ class SnapshotTable:
             return CommitResult(snap["version"], snap["snapshot_id"], 0, 0, epochs[-1])
         try:
             return self._merge_inner(
-                winners, epochs, snap, checkpoint_rows, op_col, lsn_col,
-                stats, touched_buckets, dedupe_source,
+                winners, epochs, snap, checkpoint_rows, stats, touched_buckets
             )
         except Exception as exc:
             if not isinstance(exc, CommitConflict):
@@ -1223,11 +1198,8 @@ class SnapshotTable:
         epochs: list[int],
         snap: dict[str, Any],
         checkpoint_rows,
-        op_col: str,
-        lsn_col: str,
         stats,
         touched_buckets,
-        dedupe_source: bool,
     ) -> CommitResult:
         key_col, n_buckets = snap["key_col"], snap["n_buckets"]
         mode = snap["merge_mode"]
@@ -1235,7 +1207,7 @@ class SnapshotTable:
 
         # additive schema evolution: source columns the table lacks
         payload_fields = [
-            f for f in winners.schema.fields if f.name not in (op_col, lsn_col)
+            f for f in winners.schema.fields if f.name not in (OP, LSN)
         ]
         table_cols = {f.name for f in schema.fields}
         new_fields = [f for f in payload_fields if f.name not in table_cols]
@@ -1245,7 +1217,7 @@ class SnapshotTable:
             meta_fields = [f for f in schema.fields if f.name in META_COLS]
             schema = T.StructType(data_fields + new_fields + meta_fields)
 
-        has_lsn = lsn_col in winners.columns
+        has_lsn = LSN in winners.columns
         if mode == "mor" and not has_lsn:
             raise ValueError(
                 "merge_mode='mor' requires an lsn column: read-side "
@@ -1254,11 +1226,8 @@ class SnapshotTable:
             )
         src = winners.withColumn(
             LSN_COL,
-            F.col(lsn_col).cast("long") if has_lsn else F.lit(None).cast("long"),
-        ).withColumn(DELETED_COL, F.col(op_col) == "D")
-        if has_lsn:
-            src = src.drop(lsn_col)
-        src = src.drop(op_col)
+            F.col(LSN).cast("long") if has_lsn else F.lit(None).cast("long"),
+        ).withColumn(DELETED_COL, F.col(OP) == "D").drop(LSN, OP)
 
         t = time.monotonic()
         v = snap["version"] + 1
@@ -1268,9 +1237,11 @@ class SnapshotTable:
             # never read or rewrite the target. Write amplification is
             # O(batch); readers pay the reconciliation window until
             # compact() folds the deltas down.
-            sb = _align(src, schema).repartition(n_buckets, F.col(key_col))
-            if dedupe_source:
-                sb = sb.dropDuplicates([key_col])
+            sb = (
+                _align(src, schema)
+                .repartition(n_buckets, F.col(key_col))
+                .dropDuplicates([key_col])
+            )
             # NULL lsn VALUES must fail loudly too (the column check
             # above only catches a missing column): CoW's guard treats a
             # null source lsn as "unordered upsert, always wins", which
@@ -1279,8 +1250,6 @@ class SnapshotTable:
             # The count rides the delta write via observe(): zero extra
             # jobs; on violation the commit aborts before the manifest/
             # snapshot write, leaving only unreferenced files.
-            from pyspark.sql import Observation
-
             _null_obs = Observation()
             sb = sb.observe(
                 _null_obs, F.sum(F.col(LSN_COL).isNull().cast("long")).alias("nulls")
@@ -1337,9 +1306,7 @@ class SnapshotTable:
                 F.col(LSN_COL).alias("_s_lsn"),
                 F.col(DELETED_COL).alias("_s_del"),
                 *[F.col(c).alias(f"_s_{c}") for c in data_cols],
-            ).repartition(n_buckets, F.col("_s_key"))
-            if dedupe_source:
-                s = s.dropDuplicates(["_s_key"])
+            ).repartition(n_buckets, F.col("_s_key")).dropDuplicates(["_s_key"])
             j = target.join(s, target[key_col] == s["_s_key"], "full_outer")
             # source wins when present and not older than the stored row;
             # null source lsn means "unordered upsert" — always wins

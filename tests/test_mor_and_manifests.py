@@ -26,6 +26,7 @@ from etl_gmaps_spark.tableio import (
     EpochSet,
     FormatVersionMismatch,
     SnapshotTable,
+    snapshot_table,
 )
 from etl_gmaps_spark.tableio.snapshot_table import FORMAT_VERSION
 from tests.conftest import assert_table_equal
@@ -102,15 +103,14 @@ def test_maintenance_plan_uses_manifest_sizes(spark, tmp_path, monkeypatch):
         assert e["delta_sizes"] == [os.path.getsize(f) for f in e["deltas"]]
         assert e["base_sizes"] == [os.path.getsize(f) for f in e["base"]]
 
-    want = table.maintenance_plan(max_chain=2)
-
-    import etl_gmaps_spark.tableio.snapshot_table as st_mod
+    monkeypatch.setattr(snapshot_table, "COMPACT_MAX_CHAIN", 2)
+    want = table.maintenance_plan()
 
     def boom(_path):
         raise AssertionError("maintenance_plan called os.stat despite cached sizes")
 
-    monkeypatch.setattr(st_mod.os.path, "getsize", boom)
-    assert table.maintenance_plan(max_chain=2) == want
+    monkeypatch.setattr(snapshot_table.os.path, "getsize", boom)
+    assert table.maintenance_plan() == want
 
 
 def test_mor_compact_folds_deltas(spark, tmp_path):
@@ -157,7 +157,7 @@ def test_mor_requires_lsn(spark, tmp_path):
         "doc_id string, tokens array<int>, n_tok int, source string, op string",
     )
     with pytest.raises(ValueError, match="lsn"):
-        table.merge(src, lsn_col="missing_lsn")
+        table.merge(src)
 
 
 # ----------------------------------------------------- manifest scaling
@@ -504,7 +504,7 @@ def test_overwrite_remediates_bucket_hash_mismatch(spark, tmp_path):
     assert table.read().count() == 40
 
 
-def test_auto_compact_bounds_delta_chains(spark, tmp_path):
+def test_auto_compact_bounds_delta_chains(spark, tmp_path, monkeypatch):
     """VERDICT r3 #4: with the threshold policy ON, a long replay of
     small uniform MoR epochs keeps every bucket's delta chain below the
     trigger depth (reads stay ~O(base) file count instead of O(epochs)),
@@ -521,9 +521,9 @@ def test_auto_compact_bounds_delta_chains(spark, tmp_path):
     )
     max_chain = 4
     # huge ratio isolates the depth trigger so the assertion is exact
-    Replayer(
-        table, compact_max_chain=max_chain, compact_max_delta_ratio=1e9
-    ).run(log)  # 16 epochs -> without the policy, chains reach depth 16
+    monkeypatch.setattr(snapshot_table, "COMPACT_MAX_CHAIN", max_chain)
+    monkeypatch.setattr(snapshot_table, "COMPACT_MAX_DELTA_RATIO", 1e9)
+    Replayer(table).run(log)  # 16 epochs -> without the policy, chains reach depth 16
     resolved = table._resolve(table.snapshot())
     depths = {int(b): len(e.get("deltas", [])) for b, e in resolved.items()}
     assert max(depths.values()) < max_chain, depths

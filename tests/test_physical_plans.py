@@ -166,7 +166,7 @@ def test_merge_join_adds_no_extra_exchange(spark, tmp_path):
 
 
 def test_merge_source_dedupe_adds_no_exchange(spark):
-    """dedupe_source: dropDuplicates on the merge key AFTER the bucket
+    """Merge source dedupe: dropDuplicates on the merge key AFTER the bucket
     repartition must execute in-partition — one REPARTITION exchange,
     nothing else (the replay hot path relies on this: it dropped its
     own pre-merge max_by shuffle in favor of this free dedupe)."""

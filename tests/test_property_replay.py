@@ -148,7 +148,7 @@ def test_random_maintenance_interleavings_preserve_state(
 
     from etl_gmaps_spark.schemas import TARGET_SCHEMA
     from etl_gmaps_spark.streaming.replay import Replayer
-    from etl_gmaps_spark.tableio import SnapshotTable
+    from etl_gmaps_spark.tableio import SnapshotTable, snapshot_table
 
     spark = spark_session_holder
     rows = []
@@ -183,7 +183,10 @@ def test_random_maintenance_interleavings_preserve_state(
             if op == "compact":
                 table.compact()
             elif op == "maintain":
-                table.maintain(max_chain=2, max_delta_ratio=0.1)
+                with pytest.MonkeyPatch.context() as mp:
+                    mp.setattr(snapshot_table, "COMPACT_MAX_CHAIN", 2)
+                    mp.setattr(snapshot_table, "COMPACT_MAX_DELTA_RATIO", 0.1)
+                    table.maintain()
             elif op == "expire":
                 table.expire_snapshots(keep_last=2)
         got = table.read().toPandas().sort_values("doc_id").reset_index(drop=True)

@@ -48,6 +48,21 @@ def test_incremental_replay_matches_oracle(spark, tmp_path, capsys):
     assert Replayer(table).is_done(log)
 
 
+def test_replay_takes_merge_key_from_table(spark, tmp_path):
+    """The Replayer merges on the table's own key column: a table keyed
+    on ``key`` instead of ``doc_id`` replays oracle-equal."""
+    base = gen_base(spark, n_docs=200, seed=44)
+    log = gen_changelog(spark, n_docs=200, n_events=1500, seed=44, epoch_size=500)
+    keyed_base = base.withColumnRenamed("doc_id", "key")
+    table = SnapshotTable.create(
+        spark, str(tmp_path / "tbl"), keyed_base.schema, key_col="key",
+        n_buckets=8, base_df=keyed_base,
+    )
+    Replayer(table).run(log.withColumnRenamed("doc_id", "key"))
+    expected = replay_oracle(base.toPandas(), log.toPandas())
+    assert_table_equal(table.read().withColumnRenamed("key", "doc_id"), expected)
+
+
 def test_exactly_once_rerun_is_noop(spark, tmp_path):
     base = gen_base(spark, n_docs=200, seed=1)
     log = gen_changelog(spark, n_docs=200, n_events=2000, seed=1, epoch_size=400)

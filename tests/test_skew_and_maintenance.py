@@ -12,10 +12,17 @@ from pyspark.sql import functions as F
 from etl_gmaps_spark.datagen import gen_base, gen_changelog
 from etl_gmaps_spark.oracle import replay_oracle
 from etl_gmaps_spark.schemas import TARGET_SCHEMA
+from etl_gmaps_spark.streaming import replay
 from etl_gmaps_spark.streaming.replay import Replayer
-from etl_gmaps_spark.tableio import SnapshotTable
+from etl_gmaps_spark.tableio import SnapshotTable, snapshot_table
 from etl_gmaps_spark.tableio.snapshot_table import OUT_OF_BAND_EPOCH_BASE
 from tests.conftest import assert_table_equal
+
+
+def _gc_policy(mp: pytest.MonkeyPatch, every: int, ratio: float) -> None:
+    """Set the tombstone-GC cadence and ratio constants for a test."""
+    mp.setattr(replay, "GC_EVERY", every)
+    mp.setattr(snapshot_table, "GC_TOMBSTONE_RATIO", ratio)
 
 
 def test_salted_replay_on_skewed_log(spark, tmp_path):
@@ -176,7 +183,7 @@ def test_tombstone_compaction(spark, tmp_path):
     assert live_before == table.read().count()
 
 
-def test_tombstone_gc_policy(spark, tmp_path):
+def test_tombstone_gc_policy(spark, tmp_path, monkeypatch):
     """VERDICT r4 #3: tombstone GC folded into maintain() and driven by
     the Replayer on a cadence. A delete-heavy replay with the policy on
     (a) keeps tombstone mass bounded vs the policy-off control, (b)
@@ -202,8 +209,9 @@ def test_tombstone_gc_policy(spark, tmp_path):
     t_on = SnapshotTable.create(
         spark, str(tmp_path / "on"), TARGET_SCHEMA, base_df=base, merge_mode="mor"
     )
-    rep = Replayer(t_on, gc_every=3, gc_tombstone_ratio=0.1)
-    rep.run(log)
+    with monkeypatch.context() as mp:
+        _gc_policy(mp, every=3, ratio=0.1)
+        Replayer(t_on).run(log)
 
     assert_table_equal(t_on.read(), expected)  # GC never changes live state
     gc_commits = [c for c in t_on.commit_log() if "gc_tombstones_before" in c]
@@ -253,7 +261,7 @@ def test_tombstone_gc_policy(spark, tmp_path):
     )
 
 
-def test_gc_cadence_respects_auto_compact_off(spark, tmp_path):
+def test_gc_cadence_respects_auto_compact_off(spark, tmp_path, monkeypatch):
     """Regression (r5 review): with auto_compact=False the tombstone-GC
     cadence must be GC-ONLY. The old code passed the live delta-chain
     thresholds into maintain() on every GC tick, silently re-enabling
@@ -263,7 +271,7 @@ def test_gc_cadence_respects_auto_compact_off(spark, tmp_path):
     base = gen_base(spark, n_docs=100, seed=91)
     # update-heavy, almost no deletes: tombstone mass stays far below
     # the GC ratio, so a GC-only pass plans NOTHING — but delta chains
-    # grow one file per commit and would trip compact_max_chain=2
+    # grow one file per commit and would trip COMPACT_MAX_CHAIN=2
     log = gen_changelog(
         spark, n_docs=100, n_events=600, seed=91, epoch_size=100,
         pct_insert=5, pct_delete=2, dup_epochs=(),
@@ -271,10 +279,10 @@ def test_gc_cadence_respects_auto_compact_off(spark, tmp_path):
     table = SnapshotTable.create(
         spark, str(tmp_path / "t"), TARGET_SCHEMA, base_df=base, merge_mode="mor"
     )
-    Replayer(
-        table, auto_compact=False, compact_max_chain=2,
-        compact_max_delta_ratio=0.01, gc_tombstones=True, gc_every=2,
-    ).run(log)
+    monkeypatch.setattr(snapshot_table, "COMPACT_MAX_CHAIN", 2)
+    monkeypatch.setattr(snapshot_table, "COMPACT_MAX_DELTA_RATIO", 0.01)
+    monkeypatch.setattr(replay, "GC_EVERY", 2)
+    Replayer(table, auto_compact=False, gc_tombstones=True).run(log)
     assert not [c for c in table.commit_log() if c.get("kind") == "compact"], (
         "GC cadence compacted delta chains despite auto_compact=False"
     )
@@ -288,7 +296,7 @@ def test_gc_cadence_respects_auto_compact_off(spark, tmp_path):
 
 
 
-def test_gc_cadence_survives_bounded_fetch_polls(spark, tmp_path):
+def test_gc_cadence_survives_bounded_fetch_polls(spark, tmp_path, monkeypatch):
     """Regression (r5 review): the GC cadence rides the table's
     PERSISTENT snapshot version, not a run()-local commit counter. A
     driver polling with max_epochs=1 and a fresh Replayer per poll (the
@@ -303,8 +311,9 @@ def test_gc_cadence_survives_bounded_fetch_polls(spark, tmp_path):
     table = SnapshotTable.create(
         spark, str(tmp_path / "t"), TARGET_SCHEMA, base_df=base, merge_mode="mor"
     )
+    _gc_policy(monkeypatch, every=3, ratio=0.1)
     for _ in range(10):  # one epoch per poll, fresh Replayer per poll
-        Replayer(table, gc_every=3, gc_tombstone_ratio=0.1).run(log, max_epochs=1)
+        Replayer(table).run(log, max_epochs=1)
     assert_table_equal(table.read(), expected)
     assert [c for c in table.commit_log() if "gc_tombstones_before" in c], (
         "bounded-fetch polling never fired the GC cadence"
@@ -588,7 +597,7 @@ def test_epoch_set_ranges_compact_and_merge():
 
 
 @pytest.mark.parametrize("offset", [100, OUT_OF_BAND_EPOCH_BASE], ids=["in_band", "out_of_band"])
-def test_gc_fires_on_one_based_epoch_stream(spark, tmp_path, offset):
+def test_gc_fires_on_one_based_epoch_stream(spark, tmp_path, monkeypatch, offset):
     """Regression (r5 review #1): a delete-heavy changelog whose epochs
     do not start at zero must still (a) compact its ledger via the base
     anchor and (b) run tombstone GC — the gap check reads explicit
@@ -606,7 +615,8 @@ def test_gc_fires_on_one_based_epoch_stream(spark, tmp_path, offset):
     table = SnapshotTable.create(
         spark, str(tmp_path / "t"), TARGET_SCHEMA, base_df=base, merge_mode="mor"
     )
-    rep = Replayer(table, gc_every=3, gc_tombstone_ratio=0.1)
+    _gc_policy(monkeypatch, every=3, ratio=0.1)
+    rep = Replayer(table)
     rep.run(log)
     assert_table_equal(table.read(), expected)
     es = table.applied_epochs()
@@ -623,7 +633,7 @@ def test_gc_fires_on_one_based_epoch_stream(spark, tmp_path, offset):
     assert not rep.is_done(log.withColumn("epoch", F.col("epoch") - F.lit(100)))
 
 
-def test_gc_tick_skips_stats_without_new_deletes(spark, tmp_path):
+def test_gc_tick_skips_stats_without_new_deletes(spark, tmp_path, monkeypatch):
     """r5 review: every GC tick ran tombstone_stats — a full-table
     aggregation — even on insert/update-only replays where it can plan
     nothing. The Replayer now counts deletes since the last check: the
@@ -648,7 +658,8 @@ def test_gc_tick_skips_stats_without_new_deletes(spark, tmp_path):
     table.tombstone_stats = counting_stats
     # auto_compact=False: the GC cadence must be the only caller of the
     # full-table aggregation this test counts
-    rep = Replayer(table, gc_every=1, gc_tombstone_ratio=0.1, auto_compact=False)
+    _gc_policy(monkeypatch, every=1, ratio=0.1)
+    rep = Replayer(table, auto_compact=False)
     rep.run(log)
     assert len(calls) == 1, f"{len(calls)} stats aggregations for 8 delete-free commits"
     # a delete-bearing tail re-arms the gate on the SAME Replayer; its
@@ -664,7 +675,7 @@ def test_gc_tick_skips_stats_without_new_deletes(spark, tmp_path):
     assert len(calls) >= 2, "deletes arrived but the gate never re-checked"
 
 
-def test_gc_horizon_blocks_stale_resurrection(spark, tmp_path):
+def test_gc_horizon_blocks_stale_resurrection(spark, tmp_path, monkeypatch):
     """r5 review #1 (the data-corruption hazard): after tombstone GC
     physically collects a delete's guard row, a late replay of an
     older, never-applied binlog segment could re-INSERT the deleted key
@@ -688,7 +699,9 @@ def test_gc_horizon_blocks_stale_resurrection(spark, tmp_path):
     table = SnapshotTable.create(
         spark, str(tmp_path / "t"), TARGET_SCHEMA, base_df=base, merge_mode="mor"
     )
-    Replayer(table, gc_every=3, gc_tombstone_ratio=0.05).run(log)
+    with monkeypatch.context() as mp:
+        _gc_policy(mp, every=3, ratio=0.05)
+        Replayer(table).run(log)
     assert_table_equal(table.read(), expected)
     horizon = table.gc_horizon()
     assert horizon > 0, "GC ran but persisted no horizon"
@@ -732,7 +745,9 @@ def test_gc_horizon_blocks_stale_resurrection(spark, tmp_path):
         "lsn", F.col("lsn") + F.lit(10_000_000)
     )
     vers_before = table.snapshot()["version"]
-    Replayer(table, gc_every=3, gc_tombstone_ratio=0.05).run(cont)
+    with monkeypatch.context() as mp:
+        _gc_policy(mp, every=3, ratio=0.05)
+        Replayer(table).run(cont)
     assert [
         c for c in table.commit_log()
         if "gc_tombstones_before" in c and c["snapshot"] > vers_before
@@ -751,7 +766,7 @@ def test_gc_horizon_blocks_stale_resurrection(spark, tmp_path):
     assert_table_equal(ctl.read(), expected)
 
 
-def test_gc_residue_collected_without_new_deletes(spark, tmp_path):
+def test_gc_residue_collected_without_new_deletes(spark, tmp_path, monkeypatch):
     """r5 review #5: a delete burst whose tombstones sit ABOVE the
     low-water mark at check time becomes eligible later purely because
     the mark advances — with the zero-new-deletes skip judged on delete
@@ -766,7 +781,8 @@ def test_gc_residue_collected_without_new_deletes(spark, tmp_path):
     table = SnapshotTable.create(
         spark, str(tmp_path / "t"), TARGET_SCHEMA, base_df=base, merge_mode="mor"
     )
-    rep = Replayer(table, gc_every=1, gc_tombstone_ratio=0.05)
+    _gc_policy(monkeypatch, every=1, ratio=0.05)
+    rep = Replayer(table)
     rep.run(burst)
     # the final commit's deletes sit above its own check's mark
     assert rep._gc_residue is True, "fixture failed to leave residue"
