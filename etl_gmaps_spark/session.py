@@ -14,6 +14,36 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# heap of each executor JVM under SPARK_GRAFT_EXECUTORS=k
+EXECUTOR_MEM_MB = 6144
+# 64 MB broadcast budget (default 10 MB is sized for 1 GB executors):
+# the LWW winner-key side is ~30 B/key, so epochs with up to ~2M
+# distinct keys broadcast and the event payload never shuffles before
+# the MERGE. On multi-GB executors a 64 MB broadcast is cheap; past it,
+# joins fall back to the shuffle-hash hint in the replay plan (never
+# sort-merge's payload sort).
+BROADCAST_BYTES = 64 * 1024 * 1024
+# Scan granularity: size file-split ranges so every level in the
+# 2..32-thread sweep gets multiple EVEN waves per epoch scan. At 128 MB
+# a ~2 GB epoch is 16-18 tasks — local[8] runs 2 ragged waves (last
+# wave 1-2 tasks, cores idle) and local[32] half-starves, which shows up
+# directly as lost N->4N scaling efficiency. 32 MB gives ~70
+# tasks/epoch: <=6% wave raggedness at any level here. Rule, not
+# constant: target 3-4 tasks per core per scan — on a 1000-executor
+# cluster reading TB inputs the same rule lands back at 128-256 MB.
+MAX_PARTITION_BYTES = 32 * 1024 * 1024
+# The engine's SQL runtime settings, the same for a local session and a
+# spark-submit one.
+SQL_DEFAULTS = {
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    "spark.sql.autoBroadcastJoinThreshold": str(BROADCAST_BYTES),
+    "spark.sql.adaptive.autoBroadcastJoinThreshold": str(BROADCAST_BYTES),
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.files.maxPartitionBytes": str(MAX_PARTITION_BYTES),
+}
 
 
 def get_spark(
@@ -41,8 +71,7 @@ def get_spark(
     # (4x JVMs, 4x collectors) does not have.
     n_exec = int(os.environ.get("SPARK_GRAFT_EXECUTORS", "0"))
     if n_exec > 0:
-        mem_mb = int(os.environ.get("SPARK_GRAFT_EXECUTOR_MEM_MB", "6144"))
-        master = f"local-cluster[{n_exec},{cpus},{mem_mb}]"
+        master = f"local-cluster[{n_exec},{cpus},{EXECUTOR_MEM_MB}]"
         total_cores = n_exec * cpus
     else:
         master = f"local[{cpus}]"
@@ -81,20 +110,7 @@ def get_spark(
             builder = builder.config(key, val)
         spark = builder.getOrCreate()
         launcher = spark.sparkContext.getConf()
-        mb = int(os.environ.get("SPARK_GRAFT_BROADCAST_MB", "64")) * 1024 * 1024
-        defaults = {
-            "spark.sql.adaptive.enabled": "true",
-            "spark.sql.adaptive.coalescePartitions.enabled": "true",
-            "spark.sql.adaptive.skewJoin.enabled": "true",
-            "spark.sql.execution.arrow.pyspark.enabled": "true",
-            "spark.sql.autoBroadcastJoinThreshold": str(mb),
-            "spark.sql.adaptive.autoBroadcastJoinThreshold": str(mb),
-            "spark.sql.session.timeZone": "UTC",
-            "spark.sql.files.maxPartitionBytes": os.environ.get(
-                "SPARK_GRAFT_MAX_PARTITION_BYTES", "33554432"
-            ),
-        }
-        for key, val in defaults.items():
+        for key, val in SQL_DEFAULTS.items():
             if not launcher.contains(key) and key not in (extra_conf or {}):
                 spark.conf.set(key, val)
         if shuffle_partitions is not None:
@@ -111,50 +127,15 @@ def get_spark(
         # the launcher-deference above preserves.
         spark.sparkContext.setLogLevel("WARN")
         return spark
-    shuffle_partitions = shuffle_partitions or total_cores
-    builder = (
-        SparkSession.builder.master(master)
-        .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # 64 MB broadcast budget (default 10 MB is sized for 1 GB
-        # executors): the LWW winner-key side is ~30 B/key, so epochs
-        # with up to ~2M distinct keys broadcast and the event payload
-        # never shuffles before the MERGE. On multi-GB executors a
-        # 64 MB broadcast is cheap; past it, joins fall back to the
-        # shuffle-hash hint in the replay plan (never sort-merge's
-        # payload sort).
-        .config(
-            "spark.sql.autoBroadcastJoinThreshold",
-            str(int(os.environ.get("SPARK_GRAFT_BROADCAST_MB", "64")) * 1024 * 1024),
-        )
-        .config(
-            "spark.sql.adaptive.autoBroadcastJoinThreshold",
-            str(int(os.environ.get("SPARK_GRAFT_BROADCAST_MB", "64")) * 1024 * 1024),
-        )
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
-        .config("spark.ui.enabled", "false")
-        # Scan granularity: size file-split ranges so every level in
-        # the 2..32-thread sweep gets multiple EVEN waves per epoch
-        # scan. At 128 MB a ~2 GB epoch is 16-18 tasks — local[8] runs
-        # 2 ragged waves (last wave 1-2 tasks, cores idle) and local[32]
-        # half-starves, which shows up directly as lost N->4N scaling
-        # efficiency. 32 MB gives ~70 tasks/epoch: <=6% wave raggedness
-        # at any level here. Rule, not constant: target 3-4 tasks per
-        # core per scan — on a 1000-executor cluster reading TB inputs
-        # the same rule lands back at 128-256 MB.
-        .config(
-            "spark.sql.files.maxPartitionBytes",
-            os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "33554432"),
-        )
-    )
+    conf = {
+        **SQL_DEFAULTS,
+        "spark.sql.shuffle.partitions": str(shuffle_partitions or total_cores),
+        "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"),
+        "spark.ui.enabled": "false",
+    }
     local_dir = os.environ.get("SPARK_GRAFT_LOCAL_DIR")
     if local_dir:
-        builder = builder.config("spark.local.dir", local_dir)
+        conf["spark.local.dir"] = local_dir
     # Throughput collector: this is a batch engine — long GC pauses are
     # free, GC CPU share is not. ParallelGC measured 1.6x faster than
     # the G1 default end-to-end on the 64M-event replay (G1's extra
@@ -163,9 +144,10 @@ def get_spark(
     # a real cluster.
     java_opts = os.environ.get("SPARK_GRAFT_EXTRA_JAVA", "-XX:+UseParallelGC")
     if java_opts:
-        builder = builder.config("spark.driver.extraJavaOptions", java_opts)
-        builder = builder.config("spark.executor.extraJavaOptions", java_opts)
-    for key, val in (extra_conf or {}).items():
+        conf["spark.driver.extraJavaOptions"] = java_opts
+        conf["spark.executor.extraJavaOptions"] = java_opts
+    builder = SparkSession.builder.master(master).appName(app_name)
+    for key, val in {**conf, **(extra_conf or {})}.items():
         builder = builder.config(key, val)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -319,10 +319,10 @@ class Replayer:
         # replayed delivery, where the SAME winner row appears as
         # byte-identical copies. Collapsing those here used to cost a
         # full groupBy(max_by) shuffle of the winner payload EVERY
-        # epoch; instead the merge dedupes in-partition after its own
-        # bucket repartition (see SnapshotTable.merge), where the
-        # dedupe's sort feeds the join's sort requirement — zero extra
-        # shuffle on the hot path.
+        # epoch; instead the merge collapses them in-partition after its
+        # own bucket repartition (see SnapshotTable.merge): the CoW
+        # _latest window and the MoR dropDuplicates both run there —
+        # zero extra shuffle on the hot path.
         src = cand.select(key_col, OP, LSN, *payload_cols)
         t = monotonic()
         stats_rows = [

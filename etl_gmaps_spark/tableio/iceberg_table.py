@@ -410,10 +410,13 @@ class IcebergTable:
         (Iceberg's own bucket-partition pruning replaces the
         manifest-window optimization — the parameter exists so one
         Replayer call serves both sinks); the row-level LWW guard joins
-        the MERGE arms whenever ``lsn`` is in the target or the source;
-        the source is dropDuplicates'd on the key (MERGE requires unique
-        source keys); ``checkpoint_rows`` (lineage dicts) land as
-        `cdc.ckpt.<p>` properties."""
+        the MERGE arms whenever ``lsn`` is in the target or the source,
+        so unlike SnapshotTable.merge (which requires a non-null lsn in
+        both modes) an lsn-less batch still merges here, unguarded —
+        the guard stays conditional until this path can run against the
+        Iceberg runtime jar; the source is dropDuplicates'd on the key
+        (MERGE requires unique source keys); ``checkpoint_rows``
+        (lineage dicts) land as `cdc.ckpt.<p>` properties."""
         epochs = (
             None if epoch is None
             else [int(epoch)] if isinstance(epoch, int)

@@ -33,16 +33,22 @@ Scale design:
     (FIXTURES.md #1; Iceberg's bucket transform is also Murmur3).
     Bucket pruning is METADATA-level: a merge never *reads* untouched
     buckets at all. Within the touched set, Spark has no bucketing
-    metadata for raw parquet files, so each MERGE shuffles both join
-    inputs ONCE into exactly B partitions on the key — but because
-    Murmur3 is also Spark's shuffle partitioner, partition index ==
-    bucket id, the full-outer join adds no exchange of its own, and the
-    merged output is written back one-task-per-bucket with NO post-join
+    metadata for raw parquet files, so a CoW MERGE unions the touched
+    target rows with the batch and shuffles the union ONCE into exactly
+    B partitions on the key — but because Murmur3 is also Spark's
+    shuffle partitioner, partition index == bucket id, the per-key
+    window (``_latest``) adds no exchange of its own, and the merged
+    output is written back one-task-per-bucket with NO further
     shuffle. The hash function + bucket count are stamped into table
     metadata (``bucket_hash``) and checked on every open-for-write, so
     a table persisted under a different hash fails loudly instead of
     silently mis-bucketing (a merge would compute touched buckets with
     the new hash, miss the key's real file, and duplicate the row).
+  * one row-ordering rule, ``_latest``: per key, the row with the
+    highest ``_lsn`` wins, ties going to the newest commit. The CoW
+    merge, the MoR read and ``compact()`` all run it, and ``merge()``
+    requires a non-null lsn on every source row in both modes, so every
+    written row has a position in that order.
   * two merge modes (Iceberg v1 CoW vs v2 MoR, chosen at create()):
       - ``cow``: a merge rewrites only the buckets containing touched
         keys; untouched buckets are referenced from the parent
@@ -51,9 +57,8 @@ Scale design:
         the whole table per commit — write amplification O(table/batch).
       - ``mor`` (merge-on-read): a merge writes ONLY per-bucket delta
         files (winner rows + tombstones, ~batch-sized) and never reads
-        the target; readers reconcile base+deltas per key by
-        (max _lsn, then newest snapshot) — byte-identical semantics to
-        the CoW row-level guard because every MoR write carries an lsn.
+        the target; readers reconcile base+deltas per key with the
+        same ``_latest`` rule the CoW merge applies at write time.
         ``compact()`` folds deltas back into base files (Iceberg
         rewrite_data_files), bounding read amplification.
   * snapshot metadata is O(touched buckets + 1) per commit, NOT
@@ -119,7 +124,7 @@ LSN_COL = "_lsn"  # row-level LWW guard: lsn of the writer that produced the row
 DELETED_COL = "_deleted"  # tombstone: key is dead as of _lsn (delete-then-stale-replay safety)
 META_COLS = (LSN_COL, DELETED_COL)
 # merge-source envelope (schemas.CHANGELOG_SCHEMA names): the op
-# discriminator ('I'/'U' upsert, 'D' delete) and the optional source
+# discriminator ('I'/'U' upsert, 'D' delete) and the required source
 # lsn that merge() stores as LSN_COL
 OP = "op"
 LSN = "lsn"
@@ -333,12 +338,29 @@ def bucket_expr(key_col: str, n_buckets: int):
     """Bucket id = ``pmod(murmur3(key), B)`` — F.hash IS Spark's
     shuffle partitioner (Murmur3, seed 42), so a frame repartitioned
     with ``df.repartition(B, key)`` has partition index == bucket id.
-    The merge exploits this: its join output is already laid out
+    The merge exploits this: its window output is already laid out
     one-partition-per-bucket and is written with NO further shuffle.
     (Iceberg's bucket transform is likewise Murmur3; round 1 used
     xxhash64, which could never align with the engine's own shuffle.)
     The id BUCKET_HASH is stamped into table metadata at create()."""
     return F.pmod(F.hash(F.col(key_col)), F.lit(n_buckets)).cast("int")
+
+
+def _latest(df: DataFrame, key_col: str) -> DataFrame:
+    """The engine's one row-ordering rule: per key, keep the row with
+    the highest ``_lsn``, then the highest ``_seq`` (commit sequence),
+    and drop ``_seq``. Rows that tie on both are byte-identical
+    re-deliveries, so either survives. A frame already
+    ``repartition(B, key)``-ed satisfies the window's distribution, so
+    the rule adds a sort but no exchange."""
+    w = Window.partitionBy(key_col).orderBy(
+        F.col(LSN_COL).desc_nulls_last(), F.col("_seq").desc()
+    )
+    return (
+        df.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") == 1)
+        .drop("_rn", "_seq")
+    )
 
 
 class SnapshotTable:
@@ -590,13 +612,12 @@ class SnapshotTable:
     ) -> DataFrame:
         """Current per-key state across base + delta files.
 
-        MoR reconciliation: the winning row per key is the one with the
-        highest (_lsn, snapshot-sequence) — identical to the CoW merge's
-        ``_s_lsn >= _lsn`` guard, because every MoR write carries an lsn
-        and equal lsns resolve to the later commit. The sequence is not
-        stored per row; it is recovered from the file path (data/s{N}/),
-        so base and delta files need no extra column. Pure-CoW buckets
-        (no deltas) skip the window entirely."""
+        MoR reconciliation: the winning row per key is picked by
+        ``_latest`` — highest _lsn, equal lsns resolving to the later
+        commit — the rule the CoW merge applies at write time. The
+        commit sequence is not stored per row; it is recovered from the
+        file path (data/s{N}/), so base and delta files need no extra
+        column. Pure-CoW buckets (no deltas) skip the window entirely."""
         schema = T.StructType.fromJson(snap["schema"])
         resolved = self._resolve(snap)
         sel = (
@@ -651,14 +672,7 @@ class SnapshotTable:
             contested = self._read_files(dirty_base + deltas, schema).withColumn(
                 "_seq", seq
             )
-        w = Window.partitionBy(key_col).orderBy(
-            F.col(LSN_COL).desc_nulls_last(), F.col("_seq").desc()
-        )
-        reconciled = (
-            contested.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn", "_seq")
-        )
+        reconciled = _latest(contested, key_col)
         if untouched is not None:
             reconciled = untouched.drop("_seq").unionByName(reconciled)
         if not clean:
@@ -1114,16 +1128,6 @@ class SnapshotTable:
                 os.remove(p)
         return {"removed_files": removed_files, "removed_snapshots": removed_snaps, "kept": sorted(keep)}
 
-    def evolve_schema(self, new_fields: list[T.StructField]) -> T.StructType:
-        """Additive-only schema evolution (mirrors reference migrations
-        0001→0003 and the drift-tolerant load core_logic.py:473-480)."""
-        schema = self.schema()
-        existing = {f.name for f in schema.fields}
-        added = [f for f in new_fields if f.name not in existing]
-        if not added:
-            return schema
-        return T.StructType(schema.fields + added)
-
     def merge(
         self,
         winners: DataFrame,
@@ -1137,14 +1141,22 @@ class SnapshotTable:
         depending on the table's ``merge_mode``.
 
         ``winners`` carries the table's key column, ``op`` ('I'/'U'
-        upsert, 'D' delete), optionally ``lsn``, plus payload columns.
-        Its keys must be unique up to byte-identical duplicates
-        (replayed delivery): the source is dropDuplicates'd on the key
-        AFTER the bucket repartition, so the dedupe executes
-        in-partition with zero extra shuffle, and its sort-by-key
-        output feeds the sort-merge join's own sort requirement — the
-        dedupe is effectively free. This lets the replay hot path skip
-        its own pre-merge max_by shuffle entirely.
+        upsert, 'D' delete), ``lsn``, plus payload columns. The lsn is
+        required, and non-null on every row, in both modes: it is the
+        row's position in the ``_latest`` order. A missing column raises
+        ValueError before any write; NULL values are counted on the
+        write itself (no extra job) and raise ValueError before the
+        manifest or snapshot is written, leaving only unreferenced
+        files. Its keys must be unique up to byte-identical duplicates
+        (replayed delivery), which the merge collapses without an extra
+        shuffle, so the replay hot path skips its own pre-merge max_by
+        shuffle entirely:
+          * ``cow``: the touched buckets' rows and the batch are unioned,
+            repartitioned once by key and reduced by ``_latest``; batch
+            rows win lsn ties against stored rows, and byte-identical
+            copies tie on both keys.
+          * ``mor``: the batch is dropDuplicates'd on the key AFTER the
+            bucket repartition, in-partition.
 
         ``checkpoint_rows`` (per-partition lineage dicts, see
         CHECKPOINT_PA_SCHEMA) is written with pyarrow as this commit's
@@ -1217,55 +1229,73 @@ class SnapshotTable:
             meta_fields = [f for f in schema.fields if f.name in META_COLS]
             schema = T.StructType(data_fields + new_fields + meta_fields)
 
-        has_lsn = LSN in winners.columns
-        if mode == "mor" and not has_lsn:
+        if LSN not in winners.columns:
             raise ValueError(
-                "merge_mode='mor' requires an lsn column: read-side "
-                "reconciliation orders rows by (_lsn, commit sequence); "
-                "an lsn-less upsert has no position in that order."
+                "merge requires an lsn column: rows are ordered by "
+                "(_lsn, commit sequence); an lsn-less upsert has no "
+                "position in that order."
             )
-        src = winners.withColumn(
-            LSN_COL,
-            F.col(LSN).cast("long") if has_lsn else F.lit(None).cast("long"),
-        ).withColumn(DELETED_COL, F.col(OP) == "D").drop(LSN, OP)
+        src = _align(
+            winners.withColumn(LSN_COL, F.col(LSN).cast("long"))
+            .withColumn(DELETED_COL, F.col(OP) == "D")
+            .drop(LSN, OP),
+            schema,
+        )
 
         t = time.monotonic()
         v = snap["version"] + 1
-
+        # callers that already aggregated per-bucket lineage stats know
+        # the touched set — saves one job over the batch
+        if touched_buckets is not None:
+            touched = [int(b) for b in touched_buckets]
+        else:
+            touched = [
+                r[0]
+                for r in src.select(bucket_expr(key_col, n_buckets)).distinct().collect()
+            ]
+        # NULL lsn VALUES must fail as loudly as a missing column: a
+        # null has no position in the _latest order. The count rides
+        # the write via observe(): zero extra jobs; on violation the
+        # commit aborts before the manifest/snapshot write, leaving
+        # only unreferenced files.
+        nulls = Observation()
+        null_count = F.sum(F.col(LSN_COL).isNull().cast("long")).alias("nulls")
         if mode == "mor":
             # merge-on-read: write the batch as per-bucket DELTA files —
             # never read or rewrite the target. Write amplification is
             # O(batch); readers pay the reconciliation window until
             # compact() folds the deltas down.
-            sb = (
-                _align(src, schema)
-                .repartition(n_buckets, F.col(key_col))
+            out = (
+                src.repartition(n_buckets, F.col(key_col))
                 .dropDuplicates([key_col])
+                .observe(nulls, null_count)
             )
-            # NULL lsn VALUES must fail loudly too (the column check
-            # above only catches a missing column): CoW's guard treats a
-            # null source lsn as "unordered upsert, always wins", which
-            # no single reconcile-window ordering can replicate across
-            # commits — so MoR refuses rather than silently diverging.
-            # The count rides the delta write via observe(): zero extra
-            # jobs; on violation the commit aborts before the manifest/
-            # snapshot write, leaving only unreferenced files.
-            _null_obs = Observation()
-            sb = sb.observe(
-                _null_obs, F.sum(F.col(LSN_COL).isNull().cast("long")).alias("nulls")
+        else:
+            # copy-on-write: stored rows (_seq 0) and the batch (_seq 1,
+            # so it wins lsn ties) meet in ONE repartition(B, key). Its
+            # partitioner is pmod(murmur3(key), B) == bucket_expr, so
+            # _latest's window reuses that partitioning and its output
+            # arrives one-partition-per-bucket for the aligned write.
+            # The batch is counted before the window, where a null-lsn
+            # row could still lose to a stored row. It is the union's
+            # LEFT side: the write runs in that side's session, and the
+            # observation only reports in the batch's own session (a
+            # foreachBatch micro-batch lives in a cloned one).
+            target = _align(self.read_buckets(touched), schema)
+            out = _latest(
+                src.observe(nulls, null_count)
+                .withColumn("_seq", F.lit(1))
+                .unionByName(target.withColumn("_seq", F.lit(0)))
+                .repartition(n_buckets, F.col(key_col)),
+                key_col,
             )
-            new_files = self._write_buckets(sb, v, key_col, n_buckets, aligned=True)
-            if (_null_obs.get["nulls"] or 0) > 0:
-                raise ValueError(
-                    "merge_mode='mor' requires non-null lsn values: "
-                    f"{_null_obs.get['nulls']} source rows have lsn NULL "
-                    "(null lsn means 'unordered upsert' under CoW, which "
-                    "merge-on-read reconciliation cannot order)"
-                )
-            if touched_buckets is not None:
-                touched = [int(b) for b in touched_buckets]
-            else:
-                touched = [int(b) for b in new_files]
+        new_files = self._write_buckets(out, v, key_col, n_buckets, aligned=True)
+        if (nulls.get["nulls"] or 0) > 0:
+            raise ValueError(
+                "merge requires non-null lsn values: "
+                f"{nulls.get['nulls']} source rows have lsn NULL"
+            )
+        if mode == "mor":
             resolved = self._resolve(snap)
             entries = {}
             for b in touched:
@@ -1279,55 +1309,6 @@ class SnapshotTable:
                     + [os.path.getsize(f) for f in new_d],
                 }
         else:
-            wb = _align(src, schema).withColumn(BUCKET_COL, bucket_expr(key_col, n_buckets))
-            wb.persist()
-            # callers that already aggregated per-bucket lineage stats know
-            # the touched set — saves one job over the batch
-            if touched_buckets is not None:
-                touched = [int(b) for b in touched_buckets]
-            else:
-                touched = [r[0] for r in wb.select(BUCKET_COL).distinct().collect()]
-
-            # Both sides are explicitly hash-partitioned on the merge key
-            # into exactly n_buckets partitions BEFORE the join. Spark's
-            # repartition(B, key) partitioner is pmod(murmur3(key), B) ==
-            # bucket_expr, so (a) the full-outer join reuses the children's
-            # partitioning (no ENSURE_REQUIREMENTS exchange), and (b) the
-            # join OUTPUT arrives one-partition-per-bucket, letting
-            # _write_buckets(aligned=True) skip the post-merge full-table
-            # repartition entirely — the merged table (the largest frame in
-            # the epoch) is never shuffled again after the join.
-            target = _align(self.read_buckets(touched), schema).repartition(
-                n_buckets, F.col(key_col)
-            )
-            data_cols = [f.name for f in schema.fields if f.name not in META_COLS and f.name != key_col]
-            s = wb.select(
-                F.col(key_col).alias("_s_key"),
-                F.col(LSN_COL).alias("_s_lsn"),
-                F.col(DELETED_COL).alias("_s_del"),
-                *[F.col(c).alias(f"_s_{c}") for c in data_cols],
-            ).repartition(n_buckets, F.col("_s_key")).dropDuplicates(["_s_key"])
-            j = target.join(s, target[key_col] == s["_s_key"], "full_outer")
-            # source wins when present and not older than the stored row;
-            # null source lsn means "unordered upsert" — always wins
-            take_src = F.col("_s_key").isNotNull() & (
-                F.col(LSN_COL).isNull()
-                | F.col("_s_lsn").isNull()
-                | (F.col("_s_lsn") >= F.col(LSN_COL))
-            )
-            merged = j.select(
-                F.coalesce(F.col("_s_key"), F.col(key_col)).alias(key_col),
-                *[
-                    F.when(take_src, F.col(f"_s_{c}")).otherwise(F.col(c)).alias(c)
-                    for c in data_cols
-                ],
-                F.when(take_src, F.col("_s_lsn")).otherwise(F.col(LSN_COL)).alias(LSN_COL),
-                F.when(take_src, F.col("_s_del"))
-                .otherwise(F.coalesce(F.col(DELETED_COL), F.lit(False)))
-                .alias(DELETED_COL),
-            )
-            new_files = self._write_buckets(merged, v, key_col, n_buckets, aligned=True)
-            wb.unpersist()
             # a CoW commit replaces each touched bucket's full state
             entries = {str(b): _entry(new_files.get(str(b), [])) for b in touched}
 

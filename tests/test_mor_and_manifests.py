@@ -150,8 +150,9 @@ def test_mor_crash_resume(spark, tmp_path):
     assert_table_equal(table.read(), expected)
 
 
-def test_mor_requires_lsn(spark, tmp_path):
-    table = make_table(spark, tmp_path, merge_mode="mor")
+@pytest.mark.parametrize("merge_mode", ["cow", "mor"])
+def test_merge_requires_lsn(spark, tmp_path, merge_mode):
+    table = make_table(spark, tmp_path, merge_mode=merge_mode)
     src = spark.createDataFrame(
         [("doc-1", [1, 2], 2, "web", "U")],
         "doc_id string, tokens array<int>, n_tok int, source string, op string",
@@ -416,11 +417,12 @@ def test_expire_snapshots_preserves_live_mor_deltas(spark, tmp_path):
     assert_table_equal(table.read(), expected)
 
 
-def test_mor_rejects_null_lsn_values(spark, tmp_path):
+@pytest.mark.parametrize("merge_mode", ["cow", "mor"])
+def test_merge_rejects_null_lsn_values(spark, tmp_path, merge_mode):
     """A present-but-NULL lsn must fail as loudly as a missing column:
-    CoW treats null source lsn as 'always wins', which no reconcile
-    ordering can replicate — MoR refuses instead of diverging."""
-    table = make_table(spark, tmp_path, merge_mode="mor")
+    a null has no position in the (_lsn, commit) order, so neither
+    merge mode can place the row."""
+    table = make_table(spark, tmp_path, merge_mode=merge_mode)
     src = spark.createDataFrame(
         [("doc-1", [1], 1, "web", None, "U")],
         "doc_id string, tokens array<int>, n_tok int, source string, lsn long, op string",
@@ -465,8 +467,10 @@ def test_losing_racer_cannot_clobber_winner_files(spark, tmp_path):
     assert table.read().count() == 100
 
 
-def test_mor_seq_unaffected_by_digits_in_root_path(spark, tmp_path):
-    """ADVICE r3 (low): the MoR commit sequence is recovered from the
+@pytest.mark.parametrize("merge_mode", ["cow", "mor"])
+def test_equal_lsn_later_commit_wins(spark, tmp_path, merge_mode):
+    """Two commits of one key at the SAME lsn: the later commit wins in
+    both modes. Under MoR the commit sequence is recovered from the
     file path; the pattern must anchor to the table layout, or a root
     containing /s2024/ yields a constant sequence for every file and
     equal-lsn tie-breaks between commits go nondeterministic."""
@@ -474,7 +478,7 @@ def test_mor_seq_unaffected_by_digits_in_root_path(spark, tmp_path):
     base = gen_base(spark, n_docs=50, seed=3)
     table = SnapshotTable.create(
         spark, str(root), TARGET_SCHEMA, key_col="doc_id", n_buckets=4,
-        base_df=base, merge_mode="mor",
+        base_df=base, merge_mode=merge_mode,
     )
     # same key, SAME lsn, two commits: the later commit must win
     table.merge(_one_row_src(spark, tokens=(1,), lsn=5), epoch=1)

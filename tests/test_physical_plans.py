@@ -148,21 +148,29 @@ def test_merge_bucket_alignment_one_file_per_bucket(spark, tmp_path):
     assert mismatch == 0
 
 
-def test_merge_join_adds_no_extra_exchange(spark, tmp_path):
-    """Reconstruct the merge join shape and assert the full-outer join
-    reuses the children's repartition(B, key) partitioning: exactly
-    the two REPARTITION_BY_NUM exchanges appear, no
-    ENSURE_REQUIREMENTS exchange for the join itself."""
-    left = spark.range(1000).select(F.concat(F.lit("k"), "id").alias("doc_id"), F.col("id").alias("a"))
-    right = spark.range(500).select(F.concat(F.lit("k"), "id").alias("_s_key"), F.col("id").alias("b"))
-    j = left.repartition(8, F.col("doc_id")).join(
-        right.repartition(8, F.col("_s_key")),
-        F.col("doc_id") == F.col("_s_key"),
-        "full_outer",
+def test_merge_window_adds_no_extra_exchange(spark):
+    """The CoW merge shape — stored rows and the batch unioned, one
+    repartition(B, key), then the _latest window — shuffles exactly
+    once: the window reuses the repartition's hash partitioning, so
+    there is one REPARTITION_BY_NUM exchange and no
+    ENSURE_REQUIREMENTS exchange."""
+    from etl_gmaps_spark.tableio.snapshot_table import _latest
+
+    def side(n, seq):
+        return spark.range(n).select(
+            F.concat(F.lit("k"), "id").alias("doc_id"),
+            F.col("id").alias("_lsn"),
+            F.lit(seq).alias("_seq"),
+        )
+
+    merged = _latest(
+        side(1000, 0).unionByName(side(500, 1)).repartition(8, F.col("doc_id")),
+        "doc_id",
     )
-    plan = plan_of(j)
-    assert plan.count("REPARTITION_BY_NUM") == 2
+    plan = plan_of(merged)
+    assert plan.count("REPARTITION_BY_NUM") == 1
     assert "ENSURE_REQUIREMENTS" not in plan
+    assert "Window" in plan
 
 
 def test_merge_source_dedupe_adds_no_exchange(spark):

@@ -70,7 +70,7 @@ def main() -> int:
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    from pyspark.sql import functions as F  # noqa: F401
+    from pyspark.sql import functions as F
 
     from etl_gmaps_spark.tableio.iceberg_table import IcebergTable, iceberg_available
     from etl_gmaps_spark.tableio.snapshot_table import SnapshotTable
@@ -231,27 +231,35 @@ def main() -> int:
     st = SnapshotTable.create(
         spark, st_root, schema, key_col="doc_id", n_buckets=4, base_df=base
     )
-    st.merge(batch1, epoch=1)
-    st.merge(batch1, epoch=1)
-    st.merge(batch2, epoch=2)
+    # SnapshotTable.merge requires an lsn on every row; stamping each
+    # batch with its merge order (base rows carry lsn 0) lets every
+    # later batch win, as the Iceberg side's unguarded MERGE does
+    def st_merge(df, epoch, lsn):
+        st.merge(df.withColumn("lsn", F.lit(lsn).cast("long")), epoch=epoch)
+
+    st_merge(batch1, epoch=1, lsn=1)
+    st_merge(batch1, epoch=1, lsn=1)
+    st_merge(batch2, epoch=2, lsn=2)
     # mirror the no-op and gap-filling merges from the Iceberg side so
     # the final-state comparison stays apples-to-apples
-    st.merge(
+    st_merge(
         spark.createDataFrame(
             [("doc-none", None, None, None, "D")],
             "doc_id string, n_tok int, source string, lang string, op string",
         ),
         epoch=3,
+        lsn=3,
     )
-    st.merge(
+    st_merge(
         spark.createDataFrame(
             [("doc-0004", 77, "src9", "fr", "U")],
             "doc_id string, n_tok int, source string, lang string, op string",
         ),
         epoch=0,
+        lsn=4,
     )
-    st.merge(batch_g, epoch=[10, 11])  # mirror the review-regression merges
-    st.merge(batch_e, epoch=[])
+    st_merge(batch_g, epoch=[10, 11], lsn=5)  # mirror the review-regression merges
+    st_merge(batch_e, epoch=[], lsn=6)
     a = {tuple(r) for r in it.read().select("doc_id", "n_tok", "source", "lang").collect()}
     b = {tuple(r) for r in st.read().select("doc_id", "n_tok", "source", "lang").collect()}
     checks.append(("SnapshotTable parity", a == b))
