@@ -17,11 +17,11 @@ DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 # heap of each executor JVM under SPARK_GRAFT_EXECUTORS=k
 EXECUTOR_MEM_MB = 6144
 # 64 MB broadcast budget (default 10 MB is sized for 1 GB executors):
-# the LWW winner-key side is ~30 B/key, so epochs with up to ~2M
-# distinct keys broadcast and the event payload never shuffles before
-# the MERGE. On multi-GB executors a 64 MB broadcast is cheap; past it,
-# joins fall back to the shuffle-hash hint in the replay plan (never
-# sort-merge's payload sort).
+# unhinted joins with a small side (read_pending's checkpoint rows, the
+# catalog's dimension tables) broadcast; on multi-GB executors a 64 MB
+# broadcast is cheap. The replay's winner semi-join is not one of them:
+# its SHUFFLE_HASH hint outranks size-based broadcast, so the event
+# payload shuffles once by (key, lsn) at every size (Replayer.apply_batch).
 BROADCAST_BYTES = 64 * 1024 * 1024
 # Scan granularity: size file-split ranges so every level in the
 # 2..32-thread sweep gets multiple EVEN waves per epoch scan. At 128 MB

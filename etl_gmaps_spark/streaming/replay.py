@@ -30,7 +30,7 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 from time import monotonic
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from etl_gmaps_spark.tableio.snapshot_table import (
@@ -40,6 +40,7 @@ from etl_gmaps_spark.tableio.snapshot_table import (
     EpochSet,
     SnapshotTable,
     bucket_expr,
+    observed,
 )
 
 # the change-log envelope (schemas.CHANGELOG_SCHEMA): total-order lsn,
@@ -51,6 +52,37 @@ ENVELOPE_COLS = (LSN, EPOCH, OP, "ts")
 # tombstone-GC cadence: a GC tick runs on commits whose snapshot id is
 # a multiple of this (see Replayer.apply_batch)
 GC_EVERY = 16
+# lgConfigK of the replayed-delivery sketch (hll_sketch_agg, DataSketches
+# HLL): 2^16 registers, relative standard error ~1.04/sqrt(65536) ~ 0.41%.
+# Its aggregation buffer is ONE binary field; approx_count_distinct at
+# the same precision (rsd=0.005, HLL++ p=16) carries 6,554 long fields,
+# and every stage downstream of the observation then ships a ~2 MiB
+# task binary.
+DUP_SKETCH_LG_K = 16
+
+
+def dup_metrics() -> list[Column]:
+    """The replayed-delivery observation over a batch: raw rows and
+    the sketch estimate of distinct lsn (lsns are unique per event, so
+    a replayed epoch shows as raw > distinct)."""
+    return [
+        F.count(F.lit(1)).alias("raw_rows"),
+        F.hll_sketch_estimate(F.hll_sketch_agg(LSN, DUP_SKETCH_LG_K)).alias("approx_rows"),
+    ]
+
+
+def dup_tripped(raw_rows: int, approx_rows: int, k: int) -> bool:
+    """True when a slice of ``k`` epochs physically holds a replayed
+    epoch. One replayed epoch adds ~raw/(k+1) rows, so the trip level
+    scales with k instead of a fixed 10% that a >=10-epoch group
+    dilutes past (one dup epoch in 10 is +10% raw). Floor: 0.03 x the
+    estimate, over 7 sigma of the sketch's ~0.41% error, so noise never
+    trips it; it resolves one dup epoch up to k~30. A miss past that
+    only inflates ledger stats (~3%); merge output stays exact via the
+    row-level lsn guard."""
+    approx = approx_rows or 1
+    trip = max(0.4 * raw_rows / (k + 1), 0.03 * approx)
+    return raw_rows - approx > trip
 
 
 def _utc(dt):
@@ -252,26 +284,20 @@ class Replayer:
         #   * the per-BUCKET lineage stats (checkpoint granularity) are
         #     a rollup of the per-key rows — bucket = f(key).
         #   * the winner-key set for the semi-join is a projection of
-        #     the same cached rows, so the merge job's broadcast build
-        #     reads n_keys cached rows instead of rescanning the batch.
+        #     the same cached rows, so the join's build side reads
+        #     n_keys cached rows instead of rescanning the batch.
         # Replayed-batch dedupe detection rides the SAME scan via
-        # observe(): global raw count vs HLL approx-distinct lsn
+        # observe(): global raw count vs an HLL sketch of distinct lsn
         # (exact count_distinct would re-shuffle every event — lsns are
         # unique, zero map-side reduction). Duplicates only arrive as
-        # whole replayed epochs of byte-identical rows, so a dup slice
-        # has raw ≈ 2x distinct — far outside HLL error — and the EXACT
+        # whole replayed epochs of byte-identical rows; the trip level
+        # (dup_tripped) must resolve ONE such epoch inside a
+        # batch_epochs-grouped slice, where it is only ~1/k of the rows,
+        # hence the 2^16-register sketch (DUP_SKETCH_LG_K). The EXACT
         # dedup'd counters are recomputed on that rare path below.
         ev_bytes = F.coalesce(F.col("n_tok") * 4, F.lit(0)) + F.length(key_col) + 16
         dup_obs = Observation()
-        observed = batch.observe(
-            dup_obs,
-            F.count(F.lit(1)).alias("raw_rows"),
-            # rsd=0.005: the dup threshold must resolve ONE replayed epoch
-            # inside a batch_epochs-grouped slice, where the duplicate is
-            # only ~1/k of the rows — 2% HLL noise would drown it past
-            # k≈5. 0.5% keeps a 6-sigma no-false-trip floor up to k≈30.
-            F.approx_count_distinct(LSN, rsd=0.005).alias("approx_rows"),
-        )
+        obs_batch = batch.observe(dup_obs, *dup_metrics())
         counters = [
             F.count(F.lit(1)).alias("_cnt"),
             F.max(LSN).alias("last_lsn"),
@@ -287,7 +313,7 @@ class Replayer:
             # salt_buckets reducers before the final per-key merge.
             salt = F.pmod(F.xxhash64(F.col(LSN)), F.lit(self.salt_buckets))
             keyed = (
-                observed.groupBy(key_col, salt.alias("_salt"))
+                obs_batch.groupBy(key_col, salt.alias("_salt"))
                 .agg(*counters)
                 .groupBy(key_col)
                 .agg(
@@ -299,15 +325,17 @@ class Replayer:
                 )
             )
         else:
-            keyed = observed.groupBy(key_col).agg(*counters)
+            keyed = obs_batch.groupBy(key_col).agg(*counters)
         keyed = keyed.persist()
         payload_cols = [c for c in batch.columns if c not in ENVELOPE_COLS + (key_col,)]
         win = keyed.select(F.col(key_col).alias("_w_key"), "last_lsn")
-        # join strategy ladder: broadcast while the winner-key set fits
-        # the (raised) threshold — the payload never shuffles; beyond
-        # that the SHUFFLE_HASH hint keeps the fallback a hash join —
-        # sort-merge would re-sort the full payload, the exact cost the
-        # two-phase reduce exists to avoid.
+        # The SHUFFLE_HASH hint outranks size-based broadcast, so at
+        # every batch size this is a shuffled hash semi-join: every
+        # event's payload shuffles once, hash-partitioned on
+        # (key, lsn), so a hot key's events spread over all partitions
+        # instead of landing in one skewed one, and nothing sorts the
+        # payload (sort-merge would; the two-phase reduce exists to
+        # avoid that). tests/test_physical_plans.py pins the shape.
         cand = batch.alias("_b").join(
             win.hint("shuffle_hash").alias("_w"),
             (F.col(f"_b.{key_col}") == F.col("_w._w_key"))
@@ -342,15 +370,8 @@ class Replayer:
             .collect()
         ]
         phases = {"stats_collect": monotonic() - t}
-        # dup detection: a replayed epoch among the k epochs of this
-        # slice adds ~raw/(k+1) rows, so the trip level scales with k
-        # instead of the fixed 10% that a >=10-epoch group dilutes past
-        # (one dup epoch in 10 is +10% raw — exactly at the old bar).
-        # Floor: 6 sigma of the rsd=0.005 HLL so noise never trips it.
-        # A miss past k≈30 only inflates ledger stats (~3%); merge
-        # output stays exact via the row-level lsn guard.
-        # dup_obs rode the keyed-agg scan; the collect above makes it
-        # available.
+        # dup detection (dup_tripped): dup_obs rode the keyed-agg
+        # scan; the collect above makes it available.
         # pyspark quirk (measured on 4.1): when an action's aggregation
         # collects ZERO groups — here, every event in the batch dropped
         # by the horizon filter — NO observation on that plan is
@@ -359,7 +380,7 @@ class Replayer:
         # zero surviving rows, exactly), so gate on that rather than a
         # blanket except that would also mask real failures.
         if stats_rows:
-            dup = dict(dup_obs.get)
+            dup = observed(dup_obs, "replay dup count")
         else:
             dup = {"raw_rows": 0, "approx_rows": 0}
         stale_dropped = 0
@@ -369,14 +390,12 @@ class Replayer:
             # All-stale batch: one narrow count on the pre-filter frame
             # — off the hot path by construction.
             pre_rows = (
-                int(dict(stale_obs.get)["pre_rows"] or 0)
+                int(observed(stale_obs, "replay stale count")["pre_rows"] or 0)
                 if stats_rows
                 else pre_batch.count()
             )
             stale_dropped = pre_rows - int(dup["raw_rows"] or 0)
-        approx = dup["approx_rows"] or 1
-        trip = max(0.4 * dup["raw_rows"] / (len(epochs) + 1), 0.03 * approx)
-        if dup["raw_rows"] - approx > trip:
+        if dup_tripped(dup["raw_rows"], dup["approx_rows"], len(epochs)):
             # rare path: the slice physically contains a replayed epoch —
             # recompute the EXACT deduped row/byte counters (narrow
             # projection first: the payload never enters this shuffle)

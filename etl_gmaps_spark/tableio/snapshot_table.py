@@ -155,9 +155,13 @@ LEDGER_KEEP_DEFAULT = 64  # full per-commit ledger rows kept before roll-up
 # (anti-join, no shuffle); above it the full window runs. The broadcast
 # is only the distinct keys — roughly 10-20% of delta file bytes (rows
 # carry tokens payload, keys don't) — so 256 MB of deltas is a ~25-50 MB
-# key broadcast, inside the same budget the merge's winner semi-join
-# already uses.
+# key broadcast, inside the session's 64 MB broadcast budget.
 MOR_BROADCAST_RECONCILE_BYTES = 256 * 1024 * 1024
+# Once an action has returned, its Observation metrics arrive within
+# moments. Metrics that are reported in another session than the
+# action's never arrive, and Observation.get would block forever:
+# observed() gives up after this many seconds and raises instead.
+OBSERVATION_WAIT_S = 60.0
 
 
 class CommitConflict(Exception):
@@ -361,6 +365,24 @@ def _latest(df: DataFrame, key_col: str) -> DataFrame:
         .filter(F.col("_rn") == 1)
         .drop("_rn", "_seq")
     )
+
+
+def observed(obs: Observation, name: str) -> dict:
+    """The metrics of ``obs``, read after the action that carried it
+    has returned. Polls the observation's completion for at most
+    OBSERVATION_WAIT_S seconds, then raises RuntimeError naming
+    ``name`` rather than block in ``Observation.get``."""
+    done = obs._jo.future()
+    deadline = time.monotonic() + OBSERVATION_WAIT_S
+    while not done.isCompleted():
+        if time.monotonic() >= deadline:
+            raise RuntimeError(
+                f"observation {name!r} reported no metrics within "
+                f"{OBSERVATION_WAIT_S:g} s of its action returning "
+                "(was the observed frame built in another session?)"
+            )
+        time.sleep(0.01)
+    return dict(obs.get)
 
 
 class SnapshotTable:
@@ -1280,7 +1302,8 @@ class SnapshotTable:
             # row could still lose to a stored row. It is the union's
             # LEFT side: the write runs in that side's session, and the
             # observation only reports in the batch's own session (a
-            # foreachBatch micro-batch lives in a cloned one).
+            # foreachBatch micro-batch lives in a cloned one); observed()
+            # turns a breach of that into an error, not a hang.
             target = _align(self.read_buckets(touched), schema)
             out = _latest(
                 src.observe(nulls, null_count)
@@ -1290,10 +1313,10 @@ class SnapshotTable:
                 key_col,
             )
         new_files = self._write_buckets(out, v, key_col, n_buckets, aligned=True)
-        if (nulls.get["nulls"] or 0) > 0:
+        n_null = observed(nulls, "merge lsn null count")["nulls"] or 0
+        if n_null > 0:
             raise ValueError(
-                "merge requires non-null lsn values: "
-                f"{nulls.get['nulls']} source rows have lsn NULL"
+                f"merge requires non-null lsn values: {n_null} source rows have lsn NULL"
             )
         if mode == "mor":
             resolved = self._resolve(snap)

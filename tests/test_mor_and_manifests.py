@@ -13,8 +13,10 @@ import json
 import os
 
 import datetime as _dt
+import time
 
 import pytest
+from pyspark.sql import Observation
 from pyspark.sql import functions as F
 
 from etl_gmaps_spark.datagen import gen_base, gen_changelog
@@ -343,6 +345,52 @@ def test_grouped_commit_detects_diluted_dup_epoch(spark, tmp_path):
     assert ckpt["rows_applied"].sum() == 2000
     expected = replay_oracle(base.toPandas(), log.toPandas())
     assert_table_equal(table.read(), expected)
+
+
+def test_dup_sketch_trips_at_hll_cardinality(spark):
+    """At 300k distinct lsns the dup sketch runs in its HLL mode, which
+    the 2,000-event grouped-commit test never leaves its exact small-n
+    modes to reach. Within a k=20 slice, one replayed slice of
+    300_000/21 rows must trip the rule and the clean frame must not;
+    the estimate stays inside the 0.5% error the trip floor assumes
+    (lgConfigK 16: ~0.41%)."""
+    from etl_gmaps_spark.streaming.replay import dup_metrics, dup_tripped
+
+    k, n = 20, 300_000
+    clean = spark.range(n).withColumnRenamed("id", "lsn")
+    replayed = clean.unionByName(clean.filter(F.col("lsn") < n // (k + 1)))
+
+    def dup_counts(df):
+        obs = Observation()
+        df.observe(obs, *dup_metrics()).groupBy(
+            (F.col("lsn") % 8).alias("_p")
+        ).count().collect()
+        return snapshot_table.observed(obs, "test dup count")
+
+    c = dup_counts(clean)
+    assert c["raw_rows"] == n
+    assert abs(c["approx_rows"] - n) <= 0.005 * n
+    assert not dup_tripped(c["raw_rows"], c["approx_rows"], k)
+    r = dup_counts(replayed)
+    assert r["raw_rows"] == n + n // (k + 1)
+    assert abs(r["approx_rows"] - n) <= 0.005 * n
+    assert dup_tripped(r["raw_rows"], r["approx_rows"], k)
+
+
+def test_observation_wait_is_bounded(spark, tmp_path, monkeypatch):
+    """A frame observed in another session, unioned into a frame of the
+    original session and written, reports its metrics in the other
+    session: they never arrive here and Observation.get would block
+    forever. observed() must raise, naming the observation, once
+    OBSERVATION_WAIT_S has passed."""
+    monkeypatch.setattr(snapshot_table, "OBSERVATION_WAIT_S", 2.0)
+    obs = Observation()
+    side = spark.newSession().range(10).observe(obs, F.count(F.lit(1)).alias("n"))
+    spark.range(10).unionByName(side).write.parquet(str(tmp_path / "out"))
+    t = time.monotonic()
+    with pytest.raises(RuntimeError, match="cross-session probe"):
+        snapshot_table.observed(obs, "cross-session probe")
+    assert 2.0 <= time.monotonic() - t < 30
 
 
 def test_mor_reconcile_windows_only_delta_buckets(spark, tmp_path):

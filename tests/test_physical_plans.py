@@ -5,6 +5,8 @@ a regression that silently de-optimizes a plan fails the suite."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -104,6 +106,36 @@ def test_read_pending_broadcasts_checkpoint(spark, tmp_path):
     assert "GreaterThan(lsn," in plan
     # and the result is exactly the unapplied epoch
     assert pending.count() == log.filter(F.col("epoch") == 1).count()
+
+
+def test_replay_winner_semijoin_is_shuffled_hash(spark, tmp_path, monkeypatch):
+    """Replayer.apply_batch fetches winner rows with a shuffled hash
+    semi-join at every batch size: its SHUFFLE_HASH hint outranks
+    size-based broadcast even when the cached winner-key side is tiny,
+    as here. The batch payload shuffles once, hash-partitioned on
+    (key, lsn), so a hot key is not one skewed partition."""
+    from etl_gmaps_spark.datagen import gen_base, gen_changelog
+    from etl_gmaps_spark.schemas import TARGET_SCHEMA
+    from etl_gmaps_spark.streaming.replay import Replayer
+    from etl_gmaps_spark.tableio import SnapshotTable
+
+    base = gen_base(spark, n_docs=200, seed=5)
+    log = gen_changelog(spark, n_docs=200, n_events=2000, seed=5, epoch_size=2000)
+    table = SnapshotTable.create(
+        spark, str(tmp_path / "tbl"), TARGET_SCHEMA, n_buckets=8, base_df=base
+    )
+    plans, merge = [], table.merge
+
+    def spy(src, **kw):
+        plans.append(plan_of(src))
+        return merge(src, **kw)
+
+    monkeypatch.setattr(table, "merge", spy)
+    Replayer(table).run(log)
+    (plan,) = plans
+    assert "ShuffledHashJoin" in plan and "LeftSemi" in plan
+    assert "BroadcastHashJoin" not in plan
+    assert re.search(r"hashpartitioning\(doc_id#\d+, lsn#\d+", plan)
 
 
 def test_merge_bucket_alignment_one_file_per_bucket(spark, tmp_path):
